@@ -362,9 +362,9 @@ def main() -> None:
 
     # dedup-pipeline throughput at a fixed size (BASELINE.md: reference
     # h1 run ≈ 41 MB/s single-thread; target ≥ ~20 MB/s/core sustained).
-    # JVM fused kernel when the jar is present (no Python stage in the
-    # plan), Python-kernel fallback otherwise — bit-identical outputs
-    # (tests/test_dedup_jvm_kernel.py). One warm run then best-of-2, the
+    # dedup_stats runs the JVM fused kernel when the jar is present (no
+    # Python stage in the plan), the Python kernel otherwise — bit-identical
+    # outputs (tests/test_dedup_jvm_kernel.py). One warm run then best-of-2, the
     # same steady-state protocol as the reference's 10-rep testbed sweeps
     # (testbed/t1/time.sh).
     _phase("dedup_1g")
@@ -379,7 +379,6 @@ def main() -> None:
     files = files.persist(StorageLevel.MEMORY_ONLY)
     files.count()
     jvm_kernel = has_jvm_kernel(spark)
-    stats_fn = DP.dedup_stats_jvm if jvm_kernel else DP.dedup_stats
     dedup_sec = None
     # Two warm reps: C2 compilation of the fused kernel settles on the
     # second pass (isolated profile: 43 s → 6.5 s → 1.9 s → steady ~1.5 s),
@@ -389,7 +388,7 @@ def main() -> None:
     # 965 MB/s run-to-run swing with only best-of-3).
     for _rep in range(7):
         t0 = time.perf_counter()
-        stats_fn(files, compress_type="gzip").collect()
+        DP.dedup_stats(files, compress_type="gzip").collect()
         rep_sec = round(time.perf_counter() - t0, 4)
         if _rep > 1:
             dedup_sec = rep_sec if dedup_sec is None else min(dedup_sec, rep_sec)
@@ -400,7 +399,7 @@ def main() -> None:
     if jvm_kernel:
         for _rep in range(3):
             t0 = time.perf_counter()
-            DP.dedup_stats_jvm(files, compress_type="zstd").collect()
+            DP.dedup_stats(files, compress_type="zstd").collect()
             rep_sec = round(time.perf_counter() - t0, 4)
             if _rep > 0:
                 dedup_zstd_sec = (

@@ -4,8 +4,8 @@ BASELINE.md's reference number — 41 MB/s for the h1 run — is a
 SINGLE-THREAD figure (one 2018 core running the C pipeline). The main
 bench measures the 32-way session, where per-core throughput is
 memory-bandwidth-shared and understates the kernel; this probe runs the
-identical fused JVM kernel on ``local[1]`` so the comparison is
-apples-to-apples. Invoked by bench.py in a subprocess (a session's
+same ``dedup_stats`` (the fused JVM kernel when its jar is loaded) on
+``local[1]`` so the comparison is apples-to-apples. Invoked by bench.py in a subprocess (a session's
 master can't change in-process); prints one JSON line.
 
 Measured on this container: ~65 MB/s gzip / ~144 MB/s no-codec
@@ -29,7 +29,7 @@ def main(mb: int = 256) -> None:
 
     from bensp_suite_spark.dedup import fixtures as DF
     from bensp_suite_spark.dedup import pipeline as DP
-    from bensp_suite_spark.session import get_spark, has_jvm_kernel
+    from bensp_suite_spark.session import get_spark
 
     spark = get_spark("bench-single-core", shuffle_partitions=1)
     spark.sparkContext.setLogLevel("ERROR")
@@ -37,13 +37,12 @@ def main(mb: int = 256) -> None:
         spark, n_files=mb, file_bytes=1 << 20, pool_size=64, seed=11
     ).persist(StorageLevel.MEMORY_ONLY)
     files.count()
-    stats_fn = DP.dedup_stats_jvm if has_jvm_kernel(spark) else DP.dedup_stats
-    out = {"input_mb": mb, "jvm_kernel": has_jvm_kernel(spark)}
+    out = {"input_mb": mb}
     for ctype in ("gzip", "none"):
         best = None
         for rep in range(5):
             t0 = time.perf_counter()
-            stats_fn(files, compress_type=ctype).collect()
+            DP.dedup_stats(files, compress_type=ctype).collect()
             sec = time.perf_counter() - t0
             if rep > 1:  # two JIT-warm reps, then best-of-3
                 best = sec if best is None else min(best, sec)

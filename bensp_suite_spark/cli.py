@@ -17,10 +17,10 @@ import os
 import sys
 import time
 
-import pandas as pd  # module-level: pandas_udf resolves 'pd.Series' hints via fn globals
-
 
 def main(argv: list[str] | None = None) -> int:
+    from .dedup.pipeline import CODECS
+
     ap = argparse.ArgumentParser(prog="bensp-dedup", description=__doc__)
     mode = ap.add_mutually_exclusive_group(required=True)
     mode.add_argument("-c", "--compress", action="store_true", help="encode")
@@ -30,7 +30,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("-o", "--output", help="archive path (-c) or output dir (-u)")
     ap.add_argument(
         "-w", "--compress-type", default="gzip",
-        choices=["gzip", "bzip2", "none", "zstd"],
+        choices=list(CODECS),
         help="zstd is an engine extension (archive code 3; JVM kernel "
              "required) — reference tooling reads gzip/bzip2/none only",
     )
@@ -53,14 +53,7 @@ def main(argv: list[str] | None = None) -> int:
             return 2
         files = binaryfiles.read_files(spark, args.input).select("file_id", "content")
         if args.stats:
-            from .session import has_jvm_kernel
-
-            stats_fn = (
-                pipeline.dedup_stats_jvm
-                if has_jvm_kernel(spark)
-                else pipeline.dedup_stats
-            )
-            row = stats_fn(files, compress_type=args.compress_type).collect()[0]
+            row = pipeline.dedup_stats(files, compress_type=args.compress_type).collect()[0]
             # print_stats equivalent (encoder.c:225-388)
             print(f"Total input size:        {row.total_input_bytes} B")
             print(f"Total chunks:            {row.n_chunks}")
@@ -93,7 +86,7 @@ def main(argv: list[str] | None = None) -> int:
 
     with open(args.input, "rb") as fh:
         ctype, records = ddpfmt.parse_ddp(spark, fh.read())
-    from .dedup.pipeline import TYPE_FINGERPRINT, decode
+    from .dedup.pipeline import TYPE_FINGERPRINT, decode, payload_sha1
 
     ddp_df = records.select(
         F.lit(0).cast("long").alias("file_id"),
@@ -105,47 +98,12 @@ def main(argv: list[str] | None = None) -> int:
         "payload",
     )
     # fingerprint records need their digest resolved from record order:
-    # recompute sha1 for payload records so the J4 join has both sides.
-    # JVM kernel when present (required for zstd — no Python zstd in the
-    # stdlib), Arrow pandas UDF fallback for gzip/bzip2/none.
-    from .session import has_jvm_kernel
-
-    dctype = ctype
-    if has_jvm_kernel(spark):
-        from .dedup.pipeline import _register_jvm_fuse
-
-        _register_jvm_fuse(spark)
-        recomputed = F.expr(f"bensp_payload_sha1(payload, '{dctype}')")
-    elif dctype == "zstd":
-        print(
-            "error: zstd decode requires the JVM kernel "
-            "(bensp-kernels.jar on the driver classpath)",
-            file=sys.stderr,
-        )
+    # recompute sha1 for payload records so the J4 join has both sides
+    try:
+        recomputed = payload_sha1(spark, ctype)
+    except ValueError as e:
+        print(f"error: {e}", file=sys.stderr)
         return 2
-    else:
-        from pyspark.sql.types import StringType
-
-        @F.pandas_udf(StringType())
-        def payload_sha1(payload: pd.Series) -> pd.Series:
-            import bz2
-            import hashlib
-            import zlib
-
-            def digest(b):
-                if b is None:
-                    return None
-                raw = bytes(b)
-                if dctype == "gzip":
-                    raw = zlib.decompress(raw)
-                elif dctype == "bzip2":
-                    raw = bz2.decompress(raw)
-                return hashlib.sha1(raw).hexdigest()
-
-            return payload.map(digest)
-
-        recomputed = payload_sha1(F.col("payload"))
-
     ddp_df = ddp_df.withColumn(
         "sha1",
         F.when(F.col("rtype") == TYPE_FINGERPRINT, F.col("sha1")).otherwise(recomputed),

@@ -10,27 +10,34 @@ Stage map (reference → here):
       → built-in ``sha1`` + first-wins rank window, one hash exchange on the
         digest; no locks, no driver state
   Compress (encoder.c:499-576, K6)
-      → Arrow pandas UDF over unique chunks only (dup bypass routing P4,
-        encoder.c:770-786, is a lazy ``when`` — no physical routing)
+      → fused into the chunker, over file-local-unique chunks only (dup
+        bypass routing P4, encoder.c:770-786, is a lazy ``when`` — no
+        physical routing); ``CODECS`` is the codec switch
   Reorder + write (encoder.c:1345-1496, O1/S5)
       → ``ORDER BY (file_id, l1, l2)`` range exchange, then the ``ddp``
         Parquet table (record types dedupdef.h:257-259)
 
 At 100 TB: files parallelize across executors; the only all-to-all
 exchanges are the sha1 hash shuffle (AQE-skew-safe: digests are uniform)
-and the final range sort. Compression stays Arrow-batched in the JVM→Python
-fast path.
+and the final range sort.
+
+Kernels: the fused stage, ``decode``'s reassembly and ``payload_sha1`` run
+on the JVM kernel (bensp-kernels.jar, jvm/src/bensp/kernels) when the jar
+is on the driver classpath, and on the Python kernel otherwise. This module
+is the only place that makes that choice (``_jvm_kernel``).
 """
 
 from __future__ import annotations
 
 import bz2
 import hashlib
+import logging
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -42,7 +49,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import has_jvm_kernel
 from .rabin import chunk_offsets
+
+_log = logging.getLogger(__name__)
 
 # Archive record types (reference: apps/dedup/src/dedupdef.h:257-259).
 TYPE_FINGERPRINT = 0
@@ -71,6 +81,45 @@ DDP_SCHEMA = StructType(
         StructField("payload", BinaryType()),
     ]
 )
+
+
+class Codec(NamedTuple):
+    """One ``compress_type``: the Python kernel's functions (None when only
+    the JVM kernel has the codec) and whether the JVM reassembly kernel
+    (InflateConcatUdf) inflates it."""
+
+    compress: Callable[[bytes], bytes] | None
+    decompress: Callable[[bytes], bytes] | None
+    jvm_inflate: bool
+
+
+#: The Compress stage's codec switch (encoder.c:499-576). gzip is level 1;
+#: bzip2 is level 9, mirroring BZ2_bzBuffToBuffCompress(..., 9, ...)
+#: encoder.c:523. The stdlib has no zstd: that codec lives in the JVM
+#: kernel (Spark bundles zstd-jni).
+CODECS = {
+    "gzip": Codec(lambda b: zlib.compress(b, 1), zlib.decompress, True),
+    "bzip2": Codec(lambda b: bz2.compress(b, 9), bz2.decompress, False),
+    "none": Codec(bytes, bytes, True),
+    "zstd": Codec(None, None, True),
+}
+
+
+def _codec(compress_type: str, python: bool = False) -> Codec:
+    """``CODECS[compress_type]``; raises ValueError on an unknown name, or
+    with ``python=True`` on a codec the Python kernel lacks."""
+    codec = CODECS.get(compress_type)
+    if codec is None:
+        raise ValueError(
+            f"unknown compress_type {compress_type!r}; expected one of {', '.join(CODECS)}"
+        )
+    if python and codec.compress is None:
+        raise ValueError(
+            f"compress_type={compress_type!r} requires the JVM kernel "
+            "(bensp-kernels.jar on the driver classpath; build it with "
+            "tools/build_jvm_kernel.sh)"
+        )
+    return codec
 
 
 def chunk_files(files: DataFrame) -> DataFrame:
@@ -118,7 +167,8 @@ FUSED_SCHEMA = StructType(
 def chunk_hash_compress(
     files: DataFrame, compress_type: str = "gzip", with_payload: bool = True
 ) -> DataFrame:
-    """Fused Fragment+Refine+SHA1+local-Compress stage (K2-K6 in one map).
+    """Fused Fragment+Refine+SHA1+local-Compress stage (K2-K6 in one map)
+    on the Python kernel.
 
     Performance-critical restructuring: the naive staged plan ships every
     chunk's bytes JVM→Python→JVM three times (chunk, hash, compress) and
@@ -132,20 +182,8 @@ def chunk_hash_compress(
     """
     from ..session import ensure_worker_imports as _ewi
 
+    compress = _codec(compress_type, python=True).compress
     _ewi(files.sparkSession)
-    import hashlib
-    import zlib
-    import bz2 as _bz2
-
-    if compress_type == "zstd":
-        # no zstd module in the Python stdlib — the codec lives in the JVM
-        # kernel (Spark bundles zstd-jni); callers route there via
-        # has_jvm_kernel, so reaching this path means the jar is missing
-        raise ValueError(
-            "compress_type='zstd' requires the JVM kernel "
-            "(bensp-kernels.jar on the driver classpath)"
-        )
-    ctype = compress_type
     emit_payload = with_payload
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -164,12 +202,7 @@ def chunk_hash_compress(
                         c_len = 0
                     else:
                         local_seen.add(digest)
-                        if ctype == "gzip":
-                            payload = zlib.compress(piece, 1)
-                        elif ctype == "bzip2":
-                            payload = _bz2.compress(bytes(piece), 9)
-                        else:
-                            payload = bytes(piece)
+                        payload = compress(piece)
                         c_len = len(payload)
                         if not emit_payload:
                             # stats path: lengths only — no Arrow transfer
@@ -185,17 +218,6 @@ def chunk_hash_compress(
             yield pd.DataFrame(rows)
 
     return files.select("file_id", "content").mapInPandas(gen, FUSED_SCHEMA)
-
-
-def _compress_series(data: pd.Series, compress_type: str) -> pd.Series:
-    if compress_type == "gzip":
-        return data.map(lambda b: None if b is None else zlib.compress(bytes(b), 1))
-    if compress_type == "bzip2":
-        # level 9, mirroring BZ2_bzBuffToBuffCompress(..., 9, ...) encoder.c:523
-        return data.map(lambda b: None if b is None else bz2.compress(bytes(b), 9))
-    if compress_type == "none":
-        return data.map(lambda b: None if b is None else bytes(b))
-    raise ValueError(f"unknown compress_type {compress_type!r}")
 
 
 def _first_wins_flags_skew_safe(fused: DataFrame, keys: list[str]) -> DataFrame:
@@ -257,21 +279,13 @@ def encode(
     """Full encode pipeline → ordered ``ddp`` DataFrame (write with
     .write.parquet to materialize the archive table).
 
-    Uses the fused chunk+hash+compress stage (JVM kernel when its jar is
-    loaded — identical chunk stream, no Python stage); the global
+    Uses the fused chunk+hash+compress stage (``fused_chunks``); the global
     first-wins window then only selects among payload-carrying
     (file-local-winner) rows — the global winner is always its file's
     first occurrence, so it always has a payload. Duplicates emit
     fingerprint records (bypass routing P4, encoder.c:770-786 — here a
     ``when`` column, no physical routing)."""
-    from ..session import has_jvm_kernel
-
-    if compress_type in ("gzip", "none", "bzip2", "zstd") and has_jvm_kernel(
-        files.sparkSession
-    ):
-        fused = chunk_hash_compress_jvm(files, compress_type=compress_type, with_payload=True)
-    else:
-        fused = chunk_hash_compress(files, compress_type=compress_type)
+    fused = fused_chunks(files, compress_type=compress_type)
     keys = ["file_id", "sha1"] if scope_per_file else ["sha1"]
     if skew_safe:
         # min-reduce + join instead of the window sort: the window ships
@@ -314,8 +328,9 @@ def decode(ddp: DataFrame, compress_type: str = "gzip") -> DataFrame:
     decompression stage down to a couple of tasks."""
     from ..session import ensure_worker_imports as _ewi
 
-    _ewi(ddp.sparkSession)
-    ctype = compress_type
+    spark = ddp.sparkSession
+    codec = _codec(compress_type)
+    _ewi(spark)
 
     uniques = (
         ddp.filter(F.col("rtype") != TYPE_FINGERPRINT)
@@ -325,41 +340,27 @@ def decode(ddp: DataFrame, compress_type: str = "gzip") -> DataFrame:
     )
     resolved = ddp.select("file_id", "l1", "l2", "sha1").join(uniques, on="sha1", how="left")
     n_parts = max(
-        ddp.sparkSession.sparkContext.defaultParallelism,
-        int(ddp.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")),
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
     )
     resolved = resolved.repartition(n_parts, "file_id")
 
-    from ..session import has_jvm_kernel
-
-    if ctype in ("gzip", "none", "zstd") and has_jvm_kernel(ddp.sparkSession):
+    if codec.jvm_inflate and _jvm_kernel(spark):
         # JVM reassembly: per-file ordered payload array (array_sort on the
         # (l1, l2, payload) struct sorts lexicographically by field order),
         # then one inflate+concat kernel call per file
-        _register_jvm_fuse(ddp.sparkSession)
         arr = resolved.groupBy("file_id").agg(
             F.array_sort(F.collect_list(F.struct("l1", "l2", "payload"))).alias("cs")
         )
         return arr.select(
             "file_id",
-            F.expr(f"bensp_inflate_concat(transform(cs, x -> x.payload), '{ctype}')").alias(
+            F.expr(f"bensp_inflate_concat(transform(cs, x -> x.payload), '{compress_type}')").alias(
                 "content"
             ),
         )
 
     out_schema = StructType([StructField("file_id", LongType()), StructField("content", BinaryType())])
-
-    if ctype == "gzip":
-        inflate = lambda b: zlib.decompress(bytes(b))  # noqa: E731
-    elif ctype == "bzip2":
-        inflate = lambda b: bz2.decompress(bytes(b))  # noqa: E731
-    elif ctype == "zstd":
-        raise ValueError(
-            "compress_type='zstd' decode requires the JVM kernel "
-            "(bensp-kernels.jar on the driver classpath)"
-        )
-    else:
-        inflate = bytes
+    inflate = _codec(compress_type, python=True).decompress
 
     def reassemble(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["l1", "l2"])
@@ -378,9 +379,7 @@ def dedup_stats(
     Metadata-only after the fused stage: payloads are dropped before the
     sha1 exchange, so the shuffle carries ~40 B/chunk regardless of data
     size."""
-    fused = chunk_hash_compress(files, compress_type=compress_type, with_payload=False).drop(
-        "payload"
-    )
+    fused = fused_chunks(files, compress_type=compress_type, with_payload=False)
     return _stats_from_fused(fused, scope_per_file)
 
 
@@ -388,6 +387,56 @@ FUSE_UDF_RETURN = (
     "struct<l1:array<bigint>,l2:array<bigint>,start:array<bigint>,size:array<bigint>,"
     "is_last_l2:array<boolean>,sha1:array<string>,c_len:array<bigint>,payload:array<binary>>"
 )
+
+
+def _jvm_kernel(spark) -> bool:
+    """The one kernel choice: True when bensp-kernels.jar is on the
+    session's driver classpath (its three UDFs are then registered), False
+    to run the Python kernel. Probed once per session; the Python choice
+    logs one WARNING."""
+    loaded = getattr(spark, "_bensp_jvm_kernel", None)
+    if loaded is None:
+        loaded = has_jvm_kernel(spark)
+        if loaded:
+            _register_jvm_fuse(spark)
+        else:
+            _log.warning(
+                "bensp-kernels.jar is not on the driver classpath; the dedup "
+                "pipeline runs the Python kernel (build the jar with "
+                "tools/build_jvm_kernel.sh)"
+            )
+        spark._bensp_jvm_kernel = loaded
+    return loaded
+
+
+def fused_chunks(
+    files: DataFrame, compress_type: str = "gzip", with_payload: bool = True
+) -> DataFrame:
+    """The fused chunk+sha1+compress stage on the session's kernel:
+    ``FUSED_SCHEMA`` columns, without ``payload`` unless ``with_payload``.
+    Both kernels emit the same chunk stream (tests/test_dedup_jvm_kernel.py)."""
+    _codec(compress_type)
+    if _jvm_kernel(files.sparkSession):
+        return chunk_hash_compress_jvm(files, compress_type, with_payload)
+    fused = chunk_hash_compress(files, compress_type, with_payload)
+    return fused if with_payload else fused.drop("payload")
+
+
+def payload_sha1(spark, compress_type: str) -> Column:
+    """SHA-1 of the original bytes behind each ``payload`` (null stays
+    null) — the digest ``cli -u`` needs to resolve fingerprint records
+    against payload records (decoder.c:206-238 keys by the uncompressed
+    chunk's digest)."""
+    _codec(compress_type)
+    if _jvm_kernel(spark):
+        return F.expr(f"bensp_payload_sha1(payload, '{compress_type}')")
+    inflate = _codec(compress_type, python=True).decompress
+
+    @F.pandas_udf(StringType())
+    def digest(payload: pd.Series) -> pd.Series:
+        return payload.map(lambda b: None if b is None else hashlib.sha1(inflate(b)).hexdigest())
+
+    return digest(F.col("payload"))
 
 
 def _register_jvm_fuse(spark) -> None:
@@ -413,9 +462,9 @@ def chunk_hash_compress_jvm(
     The per-file struct-of-arrays return explodes through ``arrays_zip`` --
     all codegen. ~10x the per-core rate of the numpy kernel: a JIT-compiled
     per-byte rolling-hash loop beats vectorized gathers, and the input bytes
-    never cross the executor->Python Arrow channel. Falls back unavailable
-    (raises) if the kernel jar was not on the session's driver classpath;
-    callers gate on ``session.has_jvm_kernel``."""
+    never cross the executor->Python Arrow channel. Raises if the kernel
+    jar is not on the session's driver classpath; ``fused_chunks`` picks
+    the kernel."""
     spark = files.sparkSession
     _register_jvm_fuse(spark)
     emit = "true" if with_payload else "false"
@@ -476,14 +525,8 @@ def dedup_stats_jvm(
 
 def chunk_size_histogram(files: DataFrame) -> DataFrame:
     """A2 — 256 buckets of 128 B, top bucket open-ended
-    (CHUNK_SIZE_TO_SLOT, encoder.c:133-141). Sizes come from the JVM kernel
-    when its jar is loaded (identical boundaries, no Python stage)."""
-    from ..session import has_jvm_kernel
-
-    if has_jvm_kernel(files.sparkSession):
-        chunks = chunk_hash_compress_jvm(files, "none").select("size")
-    else:
-        chunks = chunk_files(files).select("size")
+    (CHUNK_SIZE_TO_SLOT, encoder.c:133-141)."""
+    chunks = fused_chunks(files, "none", with_payload=False).select("size")
     slot = F.least(F.floor(F.col("size") / 128), F.lit(255)).cast("long")
     return chunks.groupBy(slot.alias("slot")).agg(F.count(F.lit(1)).alias("cnt"))
 

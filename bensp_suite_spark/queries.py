@@ -786,14 +786,8 @@ def cdc_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full encode-pipeline statistics (A1-A4, print_stats encoder.c:225-388)
     over deterministic per-document binary content. Deterministic output."""
     from .dedup import fixtures, pipeline
-    from .session import has_jvm_kernel
 
     files = fixtures.docs_from_documents(spark, sf_dir)
-    # same values either way (tests/test_dedup_jvm_kernel.py); the JVM fused
-    # kernel needs the bensp-kernels jar on the driver classpath, which
-    # sessions we did not create (the correctness driver's) won't have
-    if has_jvm_kernel(spark):
-        return pipeline.dedup_stats_jvm(files)
     return pipeline.dedup_stats(files)
 
 

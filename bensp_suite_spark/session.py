@@ -22,10 +22,10 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-#: Jar with the JVM-side fused CDC kernel (bensp.kernels.CdcFuseUdf), built
-#: by tools/build_jvm_kernel.sh. Loaded at session creation when present;
-#: sessions we did not create (the correctness driver's) simply fall back to
-#: the Python kernel.
+#: Jar with the JVM-side dedup kernels (bensp.kernels.*), built by
+#: tools/build_jvm_kernel.sh. Put on the driver classpath at session
+#: creation when present; dedup/pipeline.py runs the Python kernel in
+#: sessions without it (e.g. ones we did not create).
 KERNEL_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jars", "bensp-kernels.jar")
 
 

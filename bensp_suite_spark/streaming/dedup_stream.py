@@ -369,8 +369,7 @@ def stream_encode_merge(
     workload)."""
     import posixpath as _pp
 
-    from ..dedup.pipeline import chunk_hash_compress, chunk_hash_compress_jvm
-    from ..session import has_jvm_kernel
+    from ..dedup.pipeline import fused_chunks
 
     # All checkpoint probes/markers go through the Hadoop FileSystem API so
     # the sink honors the checkpoint dir's actual scheme (file://, hdfs://,
@@ -389,7 +388,6 @@ def stream_encode_merge(
     winners_dir = _pp.join(checkpoint_dir, "winners")
     commits_dir = _pp.join(checkpoint_dir, "merge_commits")
     _fs(commits_dir).mkdirs(_hpath(commits_dir))
-    use_jvm = compress_type in ("gzip", "none", "bzip2", "zstd") and has_jvm_kernel(spark)
     if chunk_parallelism is None:
         chunk_parallelism = spark.sparkContext.defaultParallelism
 
@@ -406,12 +404,7 @@ def stream_encode_merge(
         # pay the shuffle then).
         if batch_df.rdd.getNumPartitions() < max(2, chunk_parallelism // 2):
             batch_df = batch_df.repartition(chunk_parallelism)
-        if use_jvm:
-            fused = chunk_hash_compress_jvm(
-                batch_df, compress_type=compress_type, with_payload=True
-            )
-        else:
-            fused = chunk_hash_compress(batch_df, compress_type=compress_type)
+        fused = fused_chunks(batch_df, compress_type=compress_type)
         # Persist WITHOUT a separate count job: the output write's
         # range-sampling pass is the first scan, so it computes the
         # kernel once and caches it; the partition+sort pass and the

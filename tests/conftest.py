@@ -20,3 +20,12 @@ def spark():
     s = get_spark("bensp-tests", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def python_kernel(monkeypatch):
+    """Force the dedup pipeline onto its Python kernel — the one sessions
+    without bensp-kernels.jar run — by patching its one kernel choice."""
+    from bensp_suite_spark.dedup import pipeline
+
+    monkeypatch.setattr(pipeline, "_jvm_kernel", lambda spark: False)

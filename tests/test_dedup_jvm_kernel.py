@@ -49,13 +49,13 @@ def test_fused_stream_identical_no_compress(jvm_spark, corpus):
     assert _rows(jv) == _rows(py)
 
 
-def test_stats_identical(jvm_spark, corpus):
+def test_stats_identical(jvm_spark, corpus, python_kernel):
     a = pipeline.dedup_stats(corpus, "gzip").collect()
     b = pipeline.dedup_stats_jvm(corpus, "gzip").collect()
     assert a == b
 
 
-def test_stats_identical_per_file_scope(jvm_spark, corpus):
+def test_stats_identical_per_file_scope(jvm_spark, corpus, python_kernel):
     a = pipeline.dedup_stats(corpus, "gzip", scope_per_file=True).collect()
     b = pipeline.dedup_stats_jvm(corpus, "gzip", scope_per_file=True).collect()
     assert a == b

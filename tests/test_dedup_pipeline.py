@@ -94,3 +94,23 @@ def test_skew_safe_encode_on_saturated_input(spark):
     decoded = pipeline.decode(safe, compress_type="gzip")
     got = {int(r["file_id"]): bytes(r["content"]) for r in decoded.collect()}
     assert got == {i: payload for i in range(12)}
+
+
+@pytest.mark.parametrize("kernel", ["session", "python"])
+def test_unknown_codec_rejected_before_any_job(spark, files_df, request, kernel):
+    if kernel == "python":
+        request.getfixturevalue("python_kernel")
+    ddp = pipeline.encode(files_df, "gzip")
+    sc = spark.sparkContext
+    sc.setJobGroup("unknown-codec", "no job may run")
+    try:
+        for build in (
+            lambda: pipeline.encode(files_df, "gzp"),
+            lambda: pipeline.decode(ddp, "gzp"),
+            lambda: pipeline.dedup_stats(files_df, "gzp"),
+        ):
+            with pytest.raises(ValueError, match="'gzp'; expected one of gzip, bzip2, none, zstd"):
+                build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("unknown-codec")) == []
