@@ -82,64 +82,28 @@ _REVERIFY_QUOTA = 70
 #: re-checks them in the same round as the change, regardless of where
 #: the rotation happens to be. Clear when the round's changes land green.
 _FORCE_REVERIFY = [
-    # r12: lineage-truncated pooled pins (pooled_persist hands out
-    # localCheckpoint-backed frames) — every query composing pins
-    # re-pins externally in the same round as the change
-    "pipeline_daily_increment",
-    "pipeline_daily_increment_day2",
-    "pipeline_daily_increment_day3",
-    "pipeline_warc_daily",
-    "dedup_incremental_batch",
-    "dedup_incremental_bloom_prefilter",
-    "dedup_incremental_bloom_forced",
-    "dedup_simhash_pairs",
-    "dedup_semantic",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "ferret_topk_single_region",
-    "ferret_topk_multiregion",
-    "cdc_round_trip_check",
-    "text_tfidf",
-    "stream_incremental_dedup",
-    "stream_incremental_dedup_retention",
-    # r12: scale-adaptive state-store sizing for the stateful streams
-    "stream_interval_join",
-    "stream_interval_join_outer",
-    "stream_session_windows",
-    "stream_topk_per_key",
-    "stream_per_key_quota",
-    "stream_kmv_per_key",
-    "stream_cms_cells",
-    "stream_passage_dedup",
-    "stream_exact_doc_dedup",
-    "stream_windowed_metrics",
-    # r12: build-once auto-sized IVF-PQ + frozen index-meta memo +
-    # upsert internals (persisted assignment, worker-side corpus guard)
+    # one crash-safe index store (bensp_suite_spark/index_store.py): every
+    # prebuilt, upsert and stream-ANN query persists and loads through it
+    "ann_ivf_prebuilt_topk",
+    "ann_ivf_upsert_topk",
+    "ann_pq_prebuilt_topk",
+    "ann_ivfpq_prebuilt_topk",
     "ann_ivfpq_auto_topk",
     "ann_nsw_prebuilt_topk",
     "ann_nsw_upsert_topk",
+    "ann_nsw_routed_topk",
+    "ann_nsw_routed_spill_topk",
     "ann_nsw_routed_prebuilt_topk",
     "ann_nsw_routed_upsert_topk",
     "ann_nsw_routed_spill_prebuilt_topk",
     "ann_nsw_routed_pq_topk",
+    "stream_ann_brute_topk",
     "stream_ann_nsw_topk",
     "stream_ann_routed_pq_topk",
     "stream_routed_pq_upsert_probe",
-    # r12: iterative graph loops (lazy checkpoints, key-partitioned edges)
-    "graph_connected_components",
-    "graph_pagerank_copurchase",
-    "dedup_near_dup_resolution",
-    # r12: 1-slice local-rows fixtures (multimodal corpora, dim tables,
-    # k-center result frames — conversion semantics identical)
-    "multimodal_audio_dedup",
-    "multimodal_audio_snippet_search",
-    "multimodal_video_clip_search",
-    "multimodal_video_clip_search_reencoded",
-    "multimodal_video_dedup",
-    "multimodal_image_search",
-    "null_semantics_join",
-    "sample_kcenter_diverse",
-    "sample_kcenter_diverse_cells",
+    "pipeline_daily_increment",
+    "pipeline_daily_increment_day2",
+    "pipeline_daily_increment_day3",
 ]
 
 

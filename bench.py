@@ -172,10 +172,9 @@ def main() -> None:
 
     # Warm the JVM (codegen, Arrow workers) with one throwaway query. The
     # input tables are NOT persisted: every timed rep scans + decodes the
-    # parquet inputs (earlier rounds pre-persisted them via
-    # tables.cache_tables; that puts the base-table scan outside the timed
-    # region, so it was removed this round — see OPTIMIZATION_r11.md
-    # methodology item 5). Steady state comes from the min-of-3 rep
+    # parquet inputs (persisting them would put the base-table scan
+    # outside the timed region — see OPTIMIZATION_r11.md methodology
+    # item 5). Steady state comes from the min-of-3 rep
     # protocol alone: rep 0 warms the OS page cache, which is exactly the
     # footing the DuckDB comparison point has (views over the same files).
     Q.QUERIES["p7_range_filter"](spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -839,15 +838,17 @@ def main() -> None:
         n_subspaces=8, n_centroids=256,
     )
 
-    def _dir_mb(p):
-        total = 0
-        for root, _dirs, files in os.walk(p):
-            total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
+    def _files_mb(df):
+        from urllib.parse import urlparse
+
+        total = sum(os.path.getsize(urlparse(f).path) for f in df.inputFiles())
         return round(total / 1e6, 1)
 
-    ann_scale["nsw_routed_raw_graph_mb_100k"] = _dir_mb(_pq_base + "/raw/graph")
-    ann_scale["nsw_routed_pq_graph_mb_100k"] = _dir_mb(_pq_base + "/pq/graph")
     pq_idx = GA_B.load_nsw_routed_pq_index(spark, _pq_base + "/pq")
+    ann_scale["nsw_routed_raw_graph_mb_100k"] = _files_mb(
+        GA_B.load_nsw_routed_index(spark, _pq_base + "/raw")[1]
+    )
+    ann_scale["nsw_routed_pq_graph_mb_100k"] = _files_mb(pq_idx[1])
     pq_hits = (
         GA_B.nsw_routed_pq_ann_topk(
             big_q, big_emb, pq_idx, k=10, n_probe=12, ef_search=128
@@ -970,7 +971,7 @@ def main() -> None:
         )
         if _eps > 0.0:
             spill20["nsw_routed_pq_spill_factor_20k"] = round(
-                spark.read.parquet(f"{_sp_base}/pq{_tag}/graph").count() / 20_000,
+                _idx20[1].count() / 20_000,
                 2,
             )
     ann_scale.update(spill20)
@@ -1655,10 +1656,10 @@ def main() -> None:
                     "regression_reruns": regression_reruns,
                     "host_speed_factor": host_factor,
                     "phase_secs": _PHASE_SECS,
-                    # cold first-invocation build/load seconds for the
-                    # session-keyed index builds, bucketed-table writes and
-                    # _memo_load calls (r11 verdict: warm minima must never
-                    # be conflated with the cold cost they exclude)
+                    # cold first-invocation build seconds for the prebuilt
+                    # index builds and bucketed-table writes (r11 verdict:
+                    # warm minima must never be conflated with the cold
+                    # cost they exclude)
                     "cold_build_sec": dict(Q.COLD_BUILD_SECONDS),
                     "dedup_single_thread_input_mb": single_thread.get("input_mb"),
                     "dedup_single_thread_mbps": single_thread.get("mbps_gzip"),

@@ -23,32 +23,27 @@ tests/test_sources_cli.py runs this CLI end-to-end).
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
 import time
 
-# Build parameters are persisted next to the index at mkdb time and read
-# back at query time — a query --dim different from the build dim would
-# hash queries into incompatible LSH buckets and silently return degraded
-# results (ivf/pq carry their parameters inside the loaded index; lsh
-# does not). The underscore prefix keeps parquet directory scans from
-# picking the file up as data.
-_META_NAME = "_bensp_index_meta.json"
+#: --family name → the family an index manifest records
+_STORE_FAMILY = {"routed": "nsw_routed", "routed-pq": "nsw_routed_pq"}
 
 
-def _write_index_meta(index_dir: str, meta: dict) -> None:
-    os.makedirs(index_dir, exist_ok=True)
-    with open(os.path.join(index_dir, _META_NAME), "w") as fh:
-        json.dump(meta, fh)
+def _manifest(index_dir: str) -> dict | None:
+    """The index manifest mkdb committed (family + build params), or None
+    after telling the user to rebuild. Build params win over CLI flags: a
+    query --dim different from the build dim would hash queries into
+    incompatible LSH buckets and silently return degraded results."""
+    from .index_store import read_manifest
 
-
-def _read_index_meta(index_dir: str) -> dict | None:
-    p = os.path.join(index_dir, _META_NAME)
-    if not os.path.exists(p):
+    try:
+        return read_manifest(index_dir)
+    except ValueError:
+        print(f"error: {index_dir} holds no index manifest; rebuild it with "
+              "`bensp-ann mkdb`", file=sys.stderr)
         return None
-    with open(p) as fh:
-        return json.load(fh)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -139,6 +134,25 @@ def main(argv: list[str] | None = None) -> int:
               "is offline-build: mkdb --family routed-pq first)",
               file=sys.stderr)
         return 2
+    index_dir = args.index_dir if args.cmd == "upsert" else getattr(args, "index", None)
+    if index_dir:
+        manifest = _manifest(index_dir)
+        if manifest is None:
+            return 2
+        fam, params = manifest["family"], manifest["params"]
+    if args.cmd == "upsert" and fam == "nsw_routed_pq" and not args.corpus:
+        print("error: routed-pq upsert needs --corpus RAW_TABLE "
+              "(the shards hold codes, not vectors — insertion "
+              "continues at full precision from the raw table)",
+              file=sys.stderr)
+        return 2
+    if args.cmd == "query" and index_dir:
+        if fam != _STORE_FAMILY.get(args.family, args.family):
+            print(f"error: index at {index_dir} holds a {fam} index, not "
+                  f"--family {args.family}", file=sys.stderr)
+            return 2
+        args.dim = params.get("dim", args.dim)
+        args.n_cells = params.get("n_cells", args.n_cells)
 
     from .operators import similarity as SIM
     from .session import get_spark
@@ -149,42 +163,21 @@ def main(argv: list[str] | None = None) -> int:
     emb = spark.read.parquet(args.embeddings)
 
     if args.cmd == "upsert":
-        meta = _read_index_meta(args.index_dir)
-        if meta is None:
-            print(f"error: no index metadata at {args.index_dir} (built by mkdb?)",
-                  file=sys.stderr)
-            spark.stop()
-            return 2
-        fam = meta["family"]
+        from .operators import graph_ann as GA
+
+        d = args.index_dir
         if fam == "lsh":
-            SIM.upsert_lsh_index(spark, args.index_dir, emb, dim=meta["dim"])
-        elif fam == "ivf":
-            SIM.upsert_ivf_index(spark, args.index_dir, emb)
-        elif fam == "pq":
-            SIM.upsert_pq_index(spark, args.index_dir, emb)
-        elif fam == "nsw":
-            from .operators import graph_ann as GA
-
-            GA.upsert_nsw_index(emb, args.index_dir)
-        elif fam == "routed":
-            from .operators import graph_ann as GA
-
-            GA.upsert_nsw_routed_index(emb, args.index_dir)
+            SIM.upsert_lsh_index(
+                spark, d, emb, params["dim"], params["n_planes"], params["n_tables"]
+            )
+        elif fam in ("ivf", "pq", "ivfpq"):
+            getattr(SIM, f"upsert_{fam}_index")(spark, d, emb)
+        elif fam in ("nsw", "nsw_routed"):
+            getattr(GA, f"upsert_{fam}_index")(emb, d)
         else:  # routed-pq: shards hold codes only — recover touched
             # cells' raw vectors from --corpus (the lake table the exact
             # re-rank reads anyway)
-            if not args.corpus:
-                print("error: routed-pq upsert needs --corpus RAW_TABLE "
-                      "(the shards hold codes, not vectors — insertion "
-                      "continues at full precision from the raw table)",
-                      file=sys.stderr)
-                spark.stop()
-                return 2
-            from .operators import graph_ann as GA
-
-            GA.upsert_nsw_routed_pq_index(
-                emb, spark.read.parquet(args.corpus), args.index_dir
-            )
+            GA.upsert_nsw_routed_pq_index(emb, spark.read.parquet(args.corpus), d)
         if args.verbose:
             print(f"upserted into {fam} index in {time.perf_counter() - t0:.2f}s "
                   f"→ {args.index_dir}")
@@ -192,25 +185,21 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "mkdb":
+        # every save_* commits the family and its (resolved) build
+        # params in the index manifest
         if args.family == "lsh":
             SIM.save_lsh_index(emb, args.index_out, dim=args.dim)
-            meta = {"family": "lsh", "dim": args.dim}
         elif args.family == "ivf":
-            if args.n_cells is None:  # record the sized value in the meta
-                args.n_cells, _ = SIM.ivf_defaults(emb.count())
             SIM.save_ivf_index(
                 emb, args.index_out, n_cells=args.n_cells, trained=args.trained
             )
-            meta = {"family": "ivf", "n_cells": args.n_cells, "trained": args.trained}
         elif args.family == "pq":
             SIM.save_pq_index(emb, args.index_out, trained=args.trained)
-            meta = {"family": "pq", "trained": args.trained}
         else:
             from .operators import graph_ann as GA
 
             if args.family == "nsw":
                 GA.save_nsw_index(emb, args.index_out)
-                meta = {"family": "nsw"}
             else:
                 if args.n_cells is None:
                     args.n_cells, _ = SIM.ivf_defaults(emb.count())
@@ -224,35 +213,11 @@ def main(argv: list[str] | None = None) -> int:
                         emb, args.index_out, n_cells=args.n_cells,
                         n_centroids=256, spill_eps=args.spill_eps,
                     )
-                meta = {
-                    "family": args.family,
-                    "n_cells": args.n_cells,
-                    "spill_eps": args.spill_eps,
-                }
-        _write_index_meta(args.index_out, meta)
         if args.verbose:
             print(f"built {args.family} index in {time.perf_counter() - t0:.2f}s "
                   f"→ {args.index_out}")
         spark.stop()
         return 0
-
-    if args.index:
-        meta = _read_index_meta(args.index)
-        if meta is not None:
-            if meta.get("family") != args.family:
-                print(
-                    f"error: index at {args.index} was built with "
-                    f"--family {meta.get('family')}, not {args.family}",
-                    file=sys.stderr,
-                )
-                spark.stop()
-                return 2
-            # Build-time parameters win over CLI flags: mismatched values
-            # don't error, they silently degrade recall.
-            if "dim" in meta:
-                args.dim = meta["dim"]
-            if "n_cells" in meta:
-                args.n_cells = meta["n_cells"]
 
     queries = spark.read.parquet(args.queries)
     k = args.top_k

@@ -20,31 +20,9 @@ knob → shuffle partitions.
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
 import time
-
-
-# Build parameters ride with the index (same contract as ann_cli): a
-# query probing an index built at a different --dim would hash into
-# incompatible buckets and silently degrade recall. Underscore prefix =
-# ignored by parquet directory scans.
-_META_NAME = "_bensp_index_meta.json"
-
-
-def _write_index_meta(index_dir: str, meta: dict) -> None:
-    os.makedirs(index_dir, exist_ok=True)
-    with open(os.path.join(index_dir, _META_NAME), "w") as fh:
-        json.dump(meta, fh)
-
-
-def _read_index_meta(index_dir: str) -> dict | None:
-    path = os.path.join(index_dir, _META_NAME)
-    if not os.path.exists(path):
-        return None
-    with open(path) as fh:
-        return json.load(fh)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -81,7 +59,21 @@ def main(argv: list[str] | None = None) -> int:
         if not os.path.exists(p):
             print(f"error: input not found: {p}", file=sys.stderr)
             return 2
+    if args.cmd == "query" and args.index:
+        # the index manifest carries the build params (same contract as
+        # ann_cli): probing at a different --dim would hash into
+        # incompatible buckets and silently degrade recall
+        from .index_store import read_manifest
 
+        try:
+            if read_manifest(args.index)["family"] != "ferret_lsh":
+                raise ValueError(args.index)
+        except ValueError:
+            print(f"error: {args.index} holds no ferret index manifest; "
+                  "rebuild it with `bensp-ferret mkdb`", file=sys.stderr)
+            return 2
+
+    from . import index_store
     from .ferret import pipeline as FP
     from .session import get_spark
 
@@ -93,22 +85,21 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "mkdb":
         index = FP.build_lsh_index(FP.explode_regions(corpus, "c"), dim=args.dim)
-        index.write.mode("overwrite").parquet(args.index_out)
-        _write_index_meta(args.index_out, {"dim": args.dim})
+        index_store.commit(
+            args.index_out, "ferret_lsh", {"dim": args.dim}, {"index": index}
+        )
         if args.verbose:
-            n = spark.read.parquet(args.index_out).count()
+            n = index_store.load(spark, args.index_out, "ferret_lsh").frame("index").count()
             print(f"built LSH index: {n} bucket entries "
                   f"in {time.perf_counter() - t0:.2f}s → {args.index_out}")
         spark.stop()
         return 0
 
     queries = spark.read.parquet(args.queries)
-    corpus_index = spark.read.parquet(args.index) if args.index else None
-    dim = 14
+    corpus_index, dim = None, 14
     if args.index:
-        meta = _read_index_meta(args.index)
-        if meta and "dim" in meta:
-            dim = meta["dim"]  # build-time parameters win
+        idx = index_store.load(spark, args.index, "ferret_lsh")
+        corpus_index, dim = idx.frame("index"), idx.params["dim"]
     per_region_k = args.per_region_k or 2 * args.top_k
     topk = FP.ferret_topk(
         queries,

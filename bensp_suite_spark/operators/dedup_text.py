@@ -546,13 +546,12 @@ def near_dup_components(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b") ->
     # the standard iterative-algorithm pattern; swap for checkpoint(dir) on
     # a real cluster if executor loss during the loop must be survivable.
     #
-    # The edge table is repartitioned on the JOIN key (y) before the
-    # checkpoint: localCheckpoint preserves output partitioning, so every
-    # round's edges-side of the label join reuses this one exchange
-    # instead of re-shuffling the (largest) table per round (guide §2.4;
-    # at bench scale the label side broadcasts and no edges exchange
-    # exists either way — the pre-partitioning is the 100 TB shape, where
-    # labels ∝ nodes force a shuffle join every round).
+    # The edge table is only de-duplicated before the checkpoint: the
+    # `distinct()` leaves it hash-partitioned on (x, y), not on the JOIN
+    # key y, so a shuffle label join re-shuffles the edges every round.
+    # At bench scale the label side broadcasts and no edges exchange
+    # exists; repartitioning on y here would be the 100 TB shape, where
+    # labels ∝ nodes force a shuffle join every round.
     #
     # `new`'s checkpoint is LAZY (eager=False): the round's checksum
     # action materializes it and computes the fixpoint sum in ONE job

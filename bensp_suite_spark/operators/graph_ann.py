@@ -68,6 +68,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import index_store
 from .similarity import QUERY_BATCH_LIMIT, _dot, _norm
 
 __all__ = [
@@ -398,7 +399,7 @@ def nsw_routed_ann_topk(
     blow-up (the spill factor — measured by the bench each round).
     Same contract as the family: graphs nominate, exact JVM cosine
     scores; golden-pinned by the independent numpy mirror. A prebuilt
-    ``index`` carries its own spill factor in meta (the graphs were
+    ``index`` carries its own spill factor in its params (the graphs were
     built over the spilled membership); ``spill_eps`` here only affects
     the inline build.
 
@@ -544,6 +545,55 @@ def nsw_routed_ann_topk(
     return _exact_rerank(cand, q_sel, c_sel, k)
 
 
+def _graph_schema(books: np.ndarray | None) -> str:
+    payload = "cv array<double>" if books is None else "codes array<int>"
+    return f"shard long, pos long, vec_id long, {payload}, nbrs array<long>"
+
+
+def _pq_codes(U: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, S) nearest sub-centroid ids of unit vectors ``U``; ties → the
+    lowest centroid id."""
+    S, _C, ds = books.shape
+    sub = U.reshape(U.shape[0], S, ds)
+    return ((sub[:, :, None, :] - books[None, :, :, :]) ** 2).sum(-1).argmin(-1)
+
+
+def _shard_rows(shard: int, ids, U, cvs, nbrs, books) -> pd.DataFrame:
+    """One shard's graph rows: raw vectors, or PQ codes when ``books``."""
+    out = {
+        "shard": np.full(len(ids), shard, dtype=np.int64),
+        "pos": np.arange(len(ids), dtype=np.int64),
+        "vec_id": np.asarray(ids, dtype=np.int64),
+    }
+    if books is None:
+        out["cv"] = cvs
+    else:
+        out["codes"] = [list(map(int, c)) for c in _pq_codes(U, books)]
+    out["nbrs"] = [list(map(int, x)) for x in nbrs]
+    return pd.DataFrame(out)
+
+
+def _build_shards(
+    sharded: DataFrame, m: int, ef_build: int, books: np.ndarray | None = None
+) -> DataFrame:
+    """One NSW graph per shard of (shard, vec_id, cv) rows, built at
+    full precision inside one ``applyInPandas`` group each: nodes take
+    positions in ascending id order (the determinism spec), ``nbrs``
+    holds shard-local positions, and the payload is the raw vector or —
+    with ``books`` — its PQ codes."""
+
+    def worker(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
+        V = np.array([np.asarray(v, dtype=np.float64) for v in pdf["cv"]])
+        U = V / np.linalg.norm(V, axis=1, keepdims=True)
+        nbrs = nsw_build(U, m=m, ef_build=ef_build)
+        return _shard_rows(
+            int(pdf["shard"].iloc[0]), pdf["vec_id"], U, pdf["cv"], nbrs, books
+        )
+
+    return sharded.groupBy("shard").applyInPandas(worker, _graph_schema(books))
+
+
 def build_nsw_index(
     corpus: DataFrame,
     n_shards: int = 4,
@@ -559,33 +609,31 @@ def build_nsw_index(
     ``applyInPandas`` group per shard, exactly the inline build's
     worker, so probing a saved index is bit-identical to the inline
     path."""
-
-    def worker(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("neighbor_id").reset_index(drop=True)
-        V = np.array([np.asarray(v, dtype=np.float64) for v in pdf["cv"]])
-        if len(V) == 0:
-            return pd.DataFrame(
-                {"shard": [], "pos": [], "vec_id": [], "cv": [], "nbrs": []}
-            )
-        U = V / np.linalg.norm(V, axis=1, keepdims=True)
-        nbrs = nsw_build(U, m=m, ef_build=ef_build)
-        return pd.DataFrame(
-            {
-                "shard": pdf["shard"].astype("int64"),
-                "pos": pd.Series(range(len(V)), dtype="int64"),
-                "vec_id": pdf["neighbor_id"].astype("int64"),
-                "cv": pdf["cv"],
-                "nbrs": [list(map(int, x)) for x in nbrs],
-            }
-        )
-
     c_sel = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col(id_col).alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("cv"),
-    ).withColumn("shard", F.col("neighbor_id") % F.lit(n_shards))
-    return c_sel.groupBy("shard").applyInPandas(
-        worker,
-        "shard long, pos long, vec_id long, cv array<double>, nbrs array<long>",
+    ).withColumn("shard", F.col("vec_id") % F.lit(n_shards))
+    return _build_shards(c_sel, m, ef_build)
+
+
+def _cell_shards(
+    vectors: DataFrame, cent: DataFrame, spill_eps: float, id_col: str, vec_col: str
+) -> DataFrame:
+    """(vec_id, cv, shard) rows: each vector in its nearest cell, or in
+    every cell within (1+spill_eps) of it (SPANN closure assignment)."""
+    from .similarity import ivf_assign, ivf_assign_spill
+
+    sel = vectors.select(
+        F.col(id_col).alias("vec_id"),
+        F.col(vec_col).cast("array<double>").alias("cv"),
+    )
+    assign = (
+        ivf_assign_spill(sel, cent, spill_eps, "vec_id", "cv")
+        if spill_eps > 0.0
+        else ivf_assign(sel, cent, 1, "vec_id", "cv")
+    )
+    return sel.join(assign.select("vec_id", "cell"), "vec_id").withColumnRenamed(
+        "cell", "shard"
     )
 
 
@@ -607,79 +655,27 @@ def save_nsw_routed_index(
     assignment, same per-cell insertion order). ``spill_eps`` builds the
     cell graphs over the SPANN closure assignment (boundary vectors join
     every cell within (1+eps) of their nearest) and is persisted in the
-    meta so the probe knows to collapse duplicate nominations."""
-    from .similarity import ivf_assign, ivf_assign_spill, ivf_centroids
+    manifest so the probe knows to collapse duplicate nominations."""
+    from .similarity import ivf_centroids
 
     cent = ivf_centroids(corpus, n_cells, id_col, vec_col)
-    c_sel = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
+    sharded = _cell_shards(corpus, cent, spill_eps, id_col, vec_col)
+    index_store.commit(
+        path,
+        "nsw_routed",
+        {"n_cells": int(n_cells), "m": m, "ef_build": ef_build,
+         "spill_eps": float(spill_eps)},
+        {
+            "graph": _build_shards(sharded, m, ef_build),
+            "centroids": cent.coalesce(1),
+        },
     )
-    assign = (
-        ivf_assign_spill(c_sel, cent, spill_eps, "neighbor_id", "cv")
-        if spill_eps > 0.0
-        else ivf_assign(c_sel, cent, 1, "neighbor_id", "cv")
-    )
-    sharded = (
-        c_sel.join(
-            assign.select("neighbor_id", "cell"),
-            "neighbor_id",
-        ).withColumnRenamed("cell", "shard")
-    )
-
-    def worker(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("neighbor_id").reset_index(drop=True)
-        V = np.array([np.asarray(v, dtype=np.float64) for v in pdf["cv"]])
-        U = V / np.linalg.norm(V, axis=1, keepdims=True)
-        nbrs = nsw_build(U, m=m, ef_build=ef_build)
-        return pd.DataFrame(
-            {
-                "shard": pdf["shard"].astype("int64"),
-                "pos": pd.Series(range(len(V)), dtype="int64"),
-                "vec_id": pdf["neighbor_id"].astype("int64"),
-                "cv": pdf["cv"],
-                "nbrs": [list(map(int, x)) for x in nbrs],
-            }
-        )
-
-    idx = sharded.groupBy("shard").applyInPandas(
-        worker,
-        "shard long, pos long, vec_id long, cv array<double>, nbrs array<long>",
-    )
-    idx.write.mode("overwrite").partitionBy("shard").parquet(path + "/graph")
-    cent.coalesce(1).write.mode("overwrite").parquet(path + "/centroids")
-    spark = corpus.sparkSession
-    from ..session import local_rows_df as _ldf
-
-    _ldf(
-        spark,
-        [(int(n_cells), int(m), int(ef_build), float(spill_eps))],
-        "n_cells int, m int, ef_build int, spill_eps double",
-    ).write.mode("overwrite").parquet(path + "/meta")
 
 
 def load_nsw_routed_index(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
-    """→ (centroids, graph, params) for ``nsw_routed_ann_topk(index=…)``.
-    Centroids/params are frozen post-save and memoized per (session,
-    path, meta mtime); the graph read stays fresh (see _frozen_memo)."""
-
-    def _load_frozen():
-        meta = spark.read.parquet(path + "/meta").collect()[0]
-        row = meta.asDict()
-        return (
-            spark.read.parquet(path + "/centroids"),
-            {
-                "n_cells": int(row["n_cells"]),
-                "m": int(row["m"]),
-                "ef_build": int(row["ef_build"]),
-                # pre-r9 indexes have no spill column — they were built
-                # with the plain nearest-cell assignment
-                "spill_eps": float(row.get("spill_eps", 0.0) or 0.0),
-            },
-        )
-
-    cent, params = _frozen_memo(spark, path, _load_frozen)
-    return (cent, spark.read.parquet(path + "/graph"), params)
+    """→ (centroids, graph, params) for ``nsw_routed_ann_topk(index=…)``."""
+    idx = index_store.load(spark, path, "nsw_routed")
+    return idx.frame("centroids"), idx.frame("graph"), dict(idx.params)
 
 
 def _unit_pq_codebooks(
@@ -734,143 +730,39 @@ def save_nsw_routed_pq_index(
     recovered by ef_search, never wrong answers. Codebooks train on unit
     vectors (the beams' coding space) and persist beside the graph;
     ``spill_eps`` composes the SPANN closure assignment."""
-    from .similarity import ivf_assign, ivf_assign_spill, ivf_centroids
+    from .similarity import ivf_centroids
 
     cent = ivf_centroids(corpus, n_cells, id_col, vec_col)
     books = _unit_pq_codebooks(corpus, n_subspaces, n_centroids, id_col, vec_col)
-    c_sel = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
+    sharded = _cell_shards(corpus, cent, spill_eps, id_col, vec_col)
+    index_store.commit(
+        path,
+        "nsw_routed_pq",
+        {"n_cells": int(n_cells), "m": m, "ef_build": ef_build,
+         "n_subspaces": n_subspaces, "n_centroids": n_centroids,
+         "spill_eps": float(spill_eps)},
+        {
+            "graph": _build_shards(sharded, m, ef_build, books),
+            "centroids": cent.coalesce(1),
+            "codebooks": books,
+        },
     )
-    assign = (
-        ivf_assign_spill(c_sel, cent, spill_eps, "neighbor_id", "cv")
-        if spill_eps > 0.0
-        else ivf_assign(c_sel, cent, 1, "neighbor_id", "cv")
-    )
-    sharded = c_sel.join(
-        assign.select("neighbor_id", "cell"), "neighbor_id"
-    ).withColumnRenamed("cell", "shard")
-    S, C, ds = books.shape
-
-    def worker(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("neighbor_id").reset_index(drop=True)
-        V = np.array([np.asarray(v, dtype=np.float64) for v in pdf["cv"]])
-        U = V / np.linalg.norm(V, axis=1, keepdims=True)
-        nbrs = nsw_build(U, m=m, ef_build=ef_build)  # full-precision build
-        sub = U.reshape(U.shape[0], S, ds)
-        d2 = ((sub[:, :, None, :] - books[None, :, :, :]) ** 2).sum(-1)
-        codes = d2.argmin(-1)  # (n, S); ties -> lowest centroid id
-        return pd.DataFrame(
-            {
-                "shard": pdf["shard"].astype("int64"),
-                "pos": pd.Series(range(len(U)), dtype="int64"),
-                "vec_id": pdf["neighbor_id"].astype("int64"),
-                "codes": [list(map(int, c)) for c in codes],
-                "nbrs": [list(map(int, x)) for x in nbrs],
-            }
-        )
-
-    idx = sharded.groupBy("shard").applyInPandas(
-        worker,
-        "shard long, pos long, vec_id long, codes array<int>, nbrs array<long>",
-    )
-    idx.write.mode("overwrite").partitionBy("shard").parquet(path + "/graph")
-    cent.coalesce(1).write.mode("overwrite").parquet(path + "/centroids")
-    spark = corpus.sparkSession
-    from ..session import local_rows_df as _ldf
-
-    _ldf(
-        spark,
-        [
-            (int(s), int(c), books[s, c].tolist())
-            for s in range(S)
-            for c in range(C)
-        ],
-        "s int, c int, vec array<double>",
-    ).write.mode("overwrite").parquet(path + "/books")
-    _ldf(
-        spark,
-        [(int(n_cells), int(m), int(ef_build), int(S), int(C), float(spill_eps))],
-        "n_cells int, m int, ef_build int, n_subspaces int, "
-        "n_centroids int, spill_eps double",
-    ).write.mode("overwrite").parquet(path + "/meta")
-
-
-#: (applicationId, path, meta_stamp) → the FROZEN parts of a saved index
-#: (meta params, codebooks ndarray, centroid DataFrame handle). Every
-#: save_* writes its meta file LAST, and upserts rewrite only graph shard
-#: partitions — so for a given meta mtime these parts are immutable and
-#: their per-load collects (2 driver jobs each) are pure fixed cost in a
-#: per-batch maintenance loop. The GRAPH read is never memoized: callers
-#: must see post-upsert shards (the stream query's documented contract).
-_FROZEN_META_CACHE: dict = {}
-
-
-def _meta_stamp(path: str):
-    """Newest mtime_ns among the meta part files, or None off local FS
-    (no memoization there — fresh loads keep the old behavior)."""
-    import glob as _g
-    import os as _os
-
-    try:
-        return max(
-            _os.stat(p).st_mtime_ns
-            for p in _g.glob(_os.path.join(path, "meta", "part-*.parquet"))
-        )
-    except (ValueError, OSError):
-        return None
-
-
-def _frozen_memo(spark, path: str, loader):
-    """Memoize ``loader()``'s frozen-part tuple per (session, path, meta
-    mtime); a re-save rewrites meta (last) and invalidates the key."""
-    stamp = _meta_stamp(path)
-    if stamp is None:
-        return loader()
-    key = (spark.sparkContext.applicationId, path, stamp)
-    got = _FROZEN_META_CACHE.get(key)
-    if got is None:
-        # evict stale stamps of the same (session, path)
-        for k in [
-            k for k in _FROZEN_META_CACHE if k[0] == key[0] and k[1] == path
-        ]:
-            del _FROZEN_META_CACHE[k]
-        got = loader()
-        _FROZEN_META_CACHE[key] = got
-    return got
 
 
 def load_nsw_routed_pq_index(
     spark, path: str
 ) -> tuple[DataFrame, DataFrame, np.ndarray, dict]:
     """→ (centroids, graph, codebooks, params) for
-    ``nsw_routed_pq_ann_topk``. The codebook fetch is bounded (S·C
-    rows). Meta/books/centroids are frozen post-save (upserts rewrite
-    only graph shards), so their collects are memoized per (session,
-    path, meta mtime); the graph read is always fresh."""
-
-    def _load_frozen():
-        meta = spark.read.parquet(path + "/meta").collect()[0].asDict()
-        S, C = int(meta["n_subspaces"]), int(meta["n_centroids"])
-        brows = spark.read.parquet(path + "/books").collect()
-        books = np.zeros((S, C, len(brows[0]["vec"])), dtype=np.float64)
-        for r in brows:
-            books[int(r["s"]), int(r["c"])] = np.asarray(
-                r["vec"], dtype=np.float64
-            )
-        return (
-            spark.read.parquet(path + "/centroids"),
-            books,
-            {
-                "n_cells": int(meta["n_cells"]),
-                "m": int(meta["m"]),
-                "ef_build": int(meta["ef_build"]),
-                "spill_eps": float(meta.get("spill_eps", 0.0) or 0.0),
-            },
-        )
-
-    cent, books, params = _frozen_memo(spark, path, _load_frozen)
-    return (cent, spark.read.parquet(path + "/graph"), books, params)
+    ``nsw_routed_pq_ann_topk``. Centroids and codebooks are frozen after
+    the save (upserts write only graph shards), so after an upsert their
+    reads stay memo hits in ``index_store``."""
+    idx = index_store.load(spark, path, "nsw_routed_pq")
+    return (
+        idx.frame("centroids"),
+        idx.frame("graph"),
+        idx.array("codebooks"),
+        dict(idx.params),
+    )
 
 
 def nsw_routed_pq_ann_topk(
@@ -1016,39 +908,65 @@ def save_nsw_index(
     vec_col: str = "embedding",
 ) -> None:
     """Build + persist the sharded NSW graph (parquet partitioned by
-    shard, parameters alongside) — the mkdb-offline frame every other
-    index family here has: the build is paid once, probes pay only the
-    beam search. Rebuilding one shard after a lost ingest batch rewrites
-    one partition, never the index."""
-    idx = build_nsw_index(corpus, n_shards, m, ef_build, id_col, vec_col)
-    idx.write.mode("overwrite").partitionBy("shard").parquet(path + "/graph")
-    spark = corpus.sparkSession
-    from ..session import local_rows_df as _ldf
-
-    _ldf(
-        spark,
-        [(int(n_shards), int(m), int(ef_build))],
-        "n_shards int, m int, ef_build int",
-    ).write.mode("overwrite").parquet(path + "/meta")
+    shard, parameters in the manifest) — the mkdb-offline frame every
+    other index family here has: the build is paid once, probes pay only
+    the beam search. An upsert rewrites only the shards it touches, never
+    the index."""
+    index_store.commit(
+        path,
+        "nsw",
+        {"n_shards": n_shards, "m": m, "ef_build": ef_build},
+        {"graph": build_nsw_index(corpus, n_shards, m, ef_build, id_col, vec_col)},
+    )
 
 
 def load_nsw_index(spark, path: str) -> tuple[DataFrame, dict]:
-    """→ (graph DataFrame, params) for ``nsw_ann_topk(index=…)``. The
-    params collect is memoized per (session, path, meta mtime) — meta is
-    frozen post-save; the graph read stays fresh (see _frozen_memo)."""
+    """→ (graph DataFrame, params) for ``nsw_ann_topk(index=…)``."""
+    idx = index_store.load(spark, path, "nsw")
+    return idx.frame("graph"), dict(idx.params)
 
-    def _load_frozen():
-        meta = spark.read.parquet(path + "/meta").collect()[0]
-        return (
-            {
-                "n_shards": int(meta["n_shards"]),
-                "m": int(meta["m"]),
-                "ef_build": int(meta["ef_build"]),
-            },
+
+def _rewrite_touched_shards(idx, graph, add, raw=None, books=None) -> None:
+    """The upsert family's write path: every shard ``add`` (shard,
+    vec_id, cv) touches CONTINUES its insertion sequence, and the rebuilt
+    shards are committed as a new index generation — written beside the
+    graph they were read from, never over it. ``raw`` (vec_id, cv)
+    recovers full-precision vectors for code-only shards (``books``)."""
+    touched = [r["shard"] for r in add.select("shard").distinct().collect()]
+    if not touched:
+        return
+    m, ef_build = idx.params["m"], idx.params["ef_build"]
+    old = graph.filter(F.col("shard").isin(touched))
+    if raw is not None:
+        # a LEFT join: an indexed node missing from the corpus arrives
+        # with a null cv and fails the worker's guard below
+        old = old.drop("codes").join(raw, "vec_id", "left")
+    merged = old.select("shard", "pos", "vec_id", "cv", "nbrs").unionByName(
+        add.select(
+            "shard",
+            F.lit(None).cast("long").alias("pos"),
+            "vec_id",
+            "cv",
+            F.lit(None).cast("array<long>").alias("nbrs"),
         )
+    )
 
-    (params,) = _frozen_memo(spark, path, _load_frozen)
-    return (spark.read.parquet(path + "/graph"), params)
+    def worker(pdf: pd.DataFrame) -> pd.DataFrame:
+        missing = sorted(
+            int(v) for v in pdf.loc[pdf["pos"].notna() & pdf["cv"].isna(), "vec_id"].head(5)
+        )
+        if missing:
+            raise ValueError(
+                f"corpus is missing raw vectors for indexed vec_ids "
+                f"{missing} (touched shards must recover EVERY indexed "
+                "node's full-precision vector to continue insertion; "
+                "pass the same lake table the index was built from)"
+            )
+        ids, U, cvs, nbrs = _continue_insertion(pdf, m, ef_build)
+        return _shard_rows(int(pdf["shard"].iloc[0]), ids, U, cvs, nbrs, books)
+
+    rebuilt = merged.groupBy("shard").applyInPandas(worker, _graph_schema(books))
+    index_store.commit(idx.path, idx.family, idx.params, {"graph": rebuilt}, base=idx)
 
 
 def upsert_nsw_index(
@@ -1060,7 +978,8 @@ def upsert_nsw_index(
     """Append new vectors to a saved NSW index by CONTINUING each
     shard's deterministic insertion sequence (new nodes take positions
     after the existing ones, ascending id; the degree-cap prune may
-    rewire existing nodes, so touched shard partitions are rewritten).
+    rewire existing nodes, so touched shards are rewritten as a new
+    index generation).
 
     Append-only id discipline ⇒ exact rebuild equivalence: if every new
     id is greater than every indexed id, the continued insertion order
@@ -1070,62 +989,12 @@ def upsert_nsw_index(
     identity, as in every incremental HNSW deployment — but not the
     rebuild's; keep ingest batches id-monotone if you need replayable
     parity."""
-    spark = new.sparkSession
-    graph, params = load_nsw_index(spark, path)
-    n_shards, m, ef_build = params["n_shards"], params["m"], params["ef_build"]
+    idx = index_store.load(new.sparkSession, path, "nsw")
     add = new.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("cv"),
-    ).withColumn("shard", F.col("vec_id") % F.lit(n_shards))
-    touched = [r["shard"] for r in add.select("shard").distinct().collect()]
-    if not touched:
-        return
-    old = graph.filter(F.col("shard").isin(touched)).select(
-        "shard", "pos", "vec_id", "cv", "nbrs"
-    )
-    merged = old.unionByName(
-        add.select(
-            "shard",
-            F.lit(None).cast("long").alias("pos"),
-            "vec_id",
-            "cv",
-            F.lit(None).cast("array<long>").alias("nbrs"),
-        )
-    )
-
-    def worker(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids, _U, cvs, nbrs = _continue_insertion(pdf, m, ef_build)
-        return pd.DataFrame(
-            {
-                "shard": np.full(len(ids), int(pdf["shard"].iloc[0]), dtype=np.int64),
-                "pos": np.arange(len(ids), dtype=np.int64),
-                "vec_id": ids,
-                "cv": cvs,
-                "nbrs": nbrs,
-            }
-        )
-
-    rebuilt = merged.groupBy("shard").applyInPandas(
-        worker,
-        "shard long, pos long, vec_id long, cv array<double>, nbrs array<long>",
-    )
-    _overwrite_touched_shards(spark, rebuilt, path + "/graph")
-
-
-def _overwrite_touched_shards(spark, df: DataFrame, graph_path: str) -> None:
-    """The upsert family's write protocol: materialize (the plan reads
-    the same path it overwrites), then dynamic-partition-overwrite ONLY
-    the touched shard partitions, restoring the caller's prior conf."""
-    df = df.localCheckpoint(eager=True)
-    prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy("shard").parquet(graph_path)
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+    ).withColumn("shard", F.col("vec_id") % F.lit(idx.params["n_shards"]))
+    _rewrite_touched_shards(idx, idx.frame("graph"), add)
 
 
 def _continue_insertion(pdf: pd.DataFrame, m: int, ef_build: int):
@@ -1159,6 +1028,48 @@ def _continue_insertion(pdf: pd.DataFrame, m: int, ef_build: int):
     return ids, U, list(ordered["cv"]), nbrs
 
 
+def _upsert_routed(new, path, family, id_col, vec_col, corpus=None) -> None:
+    """Shared body of the routed upserts: assign against the PERSISTED
+    centroids (spill-aware — the index's own spill_eps rides its
+    manifest), drop the (shard, vec_id) pairs the graph already holds,
+    continue the touched cells."""
+    idx = index_store.load(new.sparkSession, path, family)
+    graph = idx.frame("graph")
+    add = _cell_shards(
+        new, idx.frame("centroids"), idx.params["spill_eps"], id_col, vec_col
+    )
+    # REPLAY-IDEMPOTENT: assignment is deterministic against frozen
+    # centroids, so a retried upsert (a crashed streaming batch, a
+    # double-scheduled job) re-derives the same pairs and every
+    # already-written shard drops out of `touched` instead of receiving
+    # duplicate nodes; a second full replay is a no-op. Persisted: feeds
+    # both the touched-shard collect and the rebuild plan — one
+    # assignment-UDF pass instead of one per action.
+    add = add.join(
+        graph.select("shard", "vec_id"), ["shard", "vec_id"], "left_anti"
+    ).persist()
+    try:
+        if corpus is None:
+            _rewrite_touched_shards(idx, graph, add)
+            return
+        raw = corpus.select(
+            F.col(id_col).alias("vec_id"),
+            F.col(vec_col).cast("array<double>").alias("cv"),
+        )
+        try:
+            _rewrite_touched_shards(idx, graph, add, raw, idx.array("codebooks"))
+        except Exception as exc:
+            # surface the worker-side guard as the API's documented
+            # ValueError (the failed commit left the index untouched)
+            msg = str(exc)
+            tag = "corpus is missing raw vectors"
+            if tag in msg:
+                raise ValueError(msg[msg.index(tag):].split("\n")[0]) from exc
+            raise
+    finally:
+        add.unpersist()
+
+
 def upsert_nsw_routed_index(
     new: DataFrame,
     path: str,
@@ -1167,8 +1078,9 @@ def upsert_nsw_routed_index(
 ) -> None:
     """Append new vectors to a saved ROUTED index: assignment against the
     PERSISTED centroids (spill-aware — the index's own spill_eps rides
-    its meta), then each touched cell CONTINUES its deterministic
-    insertion sequence; only touched cell partitions rewrite.
+    its manifest), then each touched cell CONTINUES its deterministic
+    insertion sequence; only touched cells are rewritten, as a new index
+    generation.
 
     Rebuild equivalence: ``ivf_centroids`` is the deterministic
     lowest-id rule, so if every new id is GREATER than every indexed id a
@@ -1183,73 +1095,7 @@ def upsert_nsw_routed_index(
     batch, a double-scheduled job) converges to the once-applied index
     instead of duplicating nodes — the contract the streaming
     index-maintenance loop relies on."""
-    from .similarity import ivf_assign, ivf_assign_spill
-
-    spark = new.sparkSession
-    cent, graph, params = load_nsw_routed_index(spark, path)
-    m, ef_build = params["m"], params["ef_build"]
-    eps = params.get("spill_eps", 0.0)
-    n_sel = new.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    assign = (
-        ivf_assign_spill(n_sel, cent, eps, "vec_id", "cv")
-        if eps > 0.0
-        else ivf_assign(n_sel, cent, 1, "vec_id", "cv")
-    )
-    add = n_sel.join(assign.select("vec_id", "cell"), "vec_id").withColumnRenamed(
-        "cell", "shard"
-    )
-    # REPLAY-IDEMPOTENT: drop (shard, vec_id) pairs the graph already
-    # holds — assignment is deterministic against frozen centroids, so a
-    # retried upsert (a crashed streaming batch, a double-scheduled job)
-    # re-derives the same pairs and every already-written shard drops out
-    # of `touched` instead of receiving duplicate nodes; a second full
-    # replay is a no-op. Fresh ingest is unaffected (nothing matches).
-    # Persisted: feeds both the touched-shard collect and the rebuild
-    # plan — one assignment-UDF pass instead of one per action.
-    add = add.join(
-        graph.select("shard", "vec_id"), ["shard", "vec_id"], "left_anti"
-    ).persist()
-    try:
-        touched = [r["shard"] for r in add.select("shard").distinct().collect()]
-        if not touched:
-            return
-        old = graph.filter(F.col("shard").isin(touched)).select(
-            "shard", "pos", "vec_id", "cv", "nbrs"
-        )
-        merged = old.unionByName(
-            add.select(
-                "shard",
-                F.lit(None).cast("long").alias("pos"),
-                "vec_id",
-                "cv",
-                F.lit(None).cast("array<long>").alias("nbrs"),
-            )
-        )
-
-        def worker(pdf: pd.DataFrame) -> pd.DataFrame:
-            ids, _U, cvs, nbrs = _continue_insertion(pdf, m, ef_build)
-            return pd.DataFrame(
-                {
-                    "shard": np.full(
-                        len(ids), int(pdf["shard"].iloc[0]), dtype=np.int64
-                    ),
-                    "pos": np.arange(len(ids), dtype=np.int64),
-                    "vec_id": ids,
-                    "cv": cvs,
-                    "nbrs": nbrs,
-                }
-            )
-
-        rebuilt = merged.groupBy("shard").applyInPandas(
-            worker,
-            "shard long, pos long, vec_id long, cv array<double>, nbrs array<long>",
-        )
-        _overwrite_touched_shards(spark, rebuilt, path + "/graph")
-    finally:
-        add.unpersist()
+    _upsert_routed(new, path, "nsw_routed", id_col, vec_col)
 
 
 def upsert_nsw_routed_pq_index(
@@ -1274,113 +1120,11 @@ def upsert_nsw_routed_pq_index(
     tested); below it, rebuild would retrain the books, which is exactly
     the retrain decision this function refuses to make silently.
     Replay-idempotent like :func:`upsert_nsw_routed_index` — retried
-    upserts drop their already-indexed (shard, vec_id) pairs."""
-    from .similarity import ivf_assign, ivf_assign_spill
-
-    spark = new.sparkSession
-    cent, graph, books, params = load_nsw_routed_pq_index(spark, path)
-    m, ef_build = params["m"], params["ef_build"]
-    eps = params.get("spill_eps", 0.0)
-    S, C, ds = books.shape
-    n_sel = new.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    assign = (
-        ivf_assign_spill(n_sel, cent, eps, "vec_id", "cv")
-        if eps > 0.0
-        else ivf_assign(n_sel, cent, 1, "vec_id", "cv")
-    )
-    add = n_sel.join(assign.select("vec_id", "cell"), "vec_id").withColumnRenamed(
-        "cell", "shard"
-    )
-    # replay-idempotent, same argument as upsert_nsw_routed_index: a
-    # retried batch's already-written (shard, vec_id) pairs drop out.
-    # Persisted: the anti-joined assignment feeds BOTH the bounded
-    # touched-shard collect and the rebuild plan — without the pin the
-    # per-row assignment UDF pass runs once per action (r11 verdict
-    # item: batch the shard-touch discovery instead of re-deriving it).
-    add = add.join(
-        graph.select("shard", "vec_id"), ["shard", "vec_id"], "left_anti"
-    ).persist()
-    try:
-        touched = [r["shard"] for r in add.select("shard").distinct().collect()]
-        if not touched:
-            return
-        raw = corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        )
-        old_g = graph.filter(F.col("shard").isin(touched)).select(
-            "shard", "pos", "vec_id", "nbrs"
-        )
-        # fail LOUDLY if the corpus is missing any indexed vector: an
-        # inner join would silently drop those nodes, _continue_insertion
-        # would renumber positions, and surviving nbrs arrays would point
-        # at the old positions — a quietly corrupted graph (r9 ADVICE).
-        # The check rides the rebuild pass itself (LEFT join; a null cv on
-        # an indexed row raises inside the worker, before any shard
-        # write) instead of paying a separate per-batch anti-join job.
-        old = old_g.join(raw, "vec_id", "left").select(
-            "shard", "pos", "vec_id", "cv", "nbrs"
-        )
-        merged = old.unionByName(
-            add.select(
-                "shard",
-                F.lit(None).cast("long").alias("pos"),
-                "vec_id",
-                "cv",
-                F.lit(None).cast("array<long>").alias("nbrs"),
-            )
-        )
-
-        def worker(pdf: pd.DataFrame) -> pd.DataFrame:
-            missing = sorted(
-                int(v)
-                for v in pdf.loc[
-                    pdf["pos"].notna() & pdf["cv"].isna(), "vec_id"
-                ].head(5)
-            )
-            if missing:
-                raise ValueError(
-                    f"corpus is missing raw vectors for indexed vec_ids "
-                    f"{missing} (touched shards must recover EVERY indexed "
-                    "node's full-precision vector to continue insertion; "
-                    "pass the same lake table the index was built from)"
-                )
-            ids, U, _cvs, nbrs = _continue_insertion(pdf, m, ef_build)
-            sub = U.reshape(U.shape[0], S, ds)
-            d2 = ((sub[:, :, None, :] - books[None, :, :, :]) ** 2).sum(-1)
-            codes = d2.argmin(-1)
-            return pd.DataFrame(
-                {
-                    "shard": np.full(
-                        len(ids), int(pdf["shard"].iloc[0]), dtype=np.int64
-                    ),
-                    "pos": np.arange(len(ids), dtype=np.int64),
-                    "vec_id": ids,
-                    "codes": [list(map(int, c)) for c in codes],
-                    "nbrs": nbrs,
-                }
-            )
-
-        rebuilt = merged.groupBy("shard").applyInPandas(
-            worker,
-            "shard long, pos long, vec_id long, codes array<int>, nbrs array<long>",
-        )
-        try:
-            _overwrite_touched_shards(spark, rebuilt, path + "/graph")
-        except Exception as exc:
-            # surface the worker-side guard as the API's documented
-            # ValueError (the raise happens during the pre-write
-            # materialization, so no shard partition was rewritten)
-            msg = str(exc)
-            tag = "corpus is missing raw vectors"
-            if tag in msg:
-                raise ValueError(msg[msg.index(tag):].split("\n")[0]) from exc
-            raise
-    finally:
-        add.unpersist()
+    upserts drop their already-indexed (shard, vec_id) pairs. A corpus
+    missing an indexed vector raises ``ValueError`` (an inner join would
+    silently drop those nodes and leave neighbor positions pointing at
+    the wrong nodes) and the index stays as it was."""
+    _upsert_routed(new, path, "nsw_routed_pq", id_col, vec_col, corpus)
 
 
 def _shard_index_search(qids: np.ndarray, qmat: np.ndarray, ef_search: int):

@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from .. import index_store
+
 ANN_SEED = 77
 
 #: above this many queries per batch, driver-side collects of the query
@@ -1904,11 +1906,24 @@ def banded_hamming_pairs(
 # ---------------------------------------------------------------------------
 # Persistent ANN indexes — the embedding-table analog of ferret's mkdb
 # (S8: build once, pay the encode/assignment cost at WRITE time, serve
-# query batches against the parquet-backed index). Each index round-trips
-# bit-exactly (codebooks/centroids are doubles, parquet stores doubles
-# exactly), so a prebuilt query is result-identical to the inline build —
-# parity-tested and driver-verified against the same oracles.
+# query batches against the parquet-backed index). Every family persists
+# through ``index_store`` (one manifest, immutable generations); each
+# index round-trips bit-exactly (codebooks/centroids are doubles, parquet
+# and .npy store doubles exactly), so a prebuilt query is result-identical
+# to the inline build — parity-tested and driver-verified against the
+# same oracles.
 # ---------------------------------------------------------------------------
+
+
+def _assign_cells(vectors: DataFrame, cent: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """1-nearest cell assignment of ``vectors`` as (neighbor_id, cv, cell, …)."""
+    return ivf_assign(
+        vectors.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
+        cent,
+        1,
+        "neighbor_id",
+        "cv",
+    )
 
 
 def save_pq_index(
@@ -1920,42 +1935,26 @@ def save_pq_index(
     vec_col: str = "embedding",
     trained: bool = False,
 ) -> None:
-    """Build + persist a PQ index: codebooks (S·C rows of sub-centroid
-    vectors) and the compressed corpus codes (8 bytes/vector at the
-    defaults). The expensive parts — Lloyd training and the encode scan —
-    happen HERE, once. ``trained=True`` uses the random-sample kmeans++
-    build (``pq_codebooks_trained``) instead of the deterministic
-    lowest-id build."""
-    spark = corpus.sparkSession
+    """Build + persist a PQ index: codebooks (S·C sub-centroid vectors)
+    and the compressed corpus codes (8 bytes/vector at the defaults). The
+    expensive parts — Lloyd training and the encode scan — happen HERE,
+    once. ``trained=True`` uses the random-sample kmeans++ build
+    (``pq_codebooks_trained``) instead of the deterministic lowest-id
+    build."""
     build = pq_codebooks_trained if trained else pq_codebooks
     books = build(corpus, n_subspaces, n_centroids, id_col, vec_col)
-    S, C, _ds = books.shape
-    rows = [
-        (int(s), int(c), [float(x) for x in books[s, c]])
-        for s in range(S)
-        for c in range(C)
-    ]
-    from ..session import local_rows_df as _ldf
-
-    _ldf(
-        spark, rows, "subspace int, centroid int, features array<double>"
-    ).write.mode("overwrite").parquet(path + "/codebooks")
-    pq_encode(corpus, books, id_col, vec_col).write.mode("overwrite").parquet(
-        path + "/codes"
+    index_store.commit(
+        path,
+        "pq",
+        {"n_subspaces": n_subspaces, "n_centroids": n_centroids, "trained": trained},
+        {"codebooks": books, "codes": pq_encode(corpus, books, id_col, vec_col)},
     )
 
 
 def load_pq_index(spark, path: str) -> tuple[np.ndarray, DataFrame]:
-    """→ (codebooks ndarray, codes DataFrame) for ``pq_ann_topk(index=…)``.
-    The codebook table is S·C rows — a bounded driver fetch by design."""
-    rows = spark.read.parquet(path + "/codebooks").collect()
-    S = max(r["subspace"] for r in rows) + 1
-    C = max(r["centroid"] for r in rows) + 1
-    ds = len(rows[0]["features"])
-    books = np.zeros((S, C, ds), dtype=np.float64)
-    for r in rows:
-        books[r["subspace"], r["centroid"]] = r["features"]
-    return books, spark.read.parquet(path + "/codes")
+    """→ (codebooks ndarray, codes DataFrame) for ``pq_ann_topk(index=…)``."""
+    idx = index_store.load(spark, path, "pq")
+    return idx.array("codebooks"), idx.frame("codes")
 
 
 def save_ivf_index(
@@ -1973,29 +1972,28 @@ def save_ivf_index(
     (``ivf_centroids_trained``) instead of the deterministic lowest-id
     pick. ``n_cells=None`` sizes the index from the corpus count
     (:func:`ivf_defaults`) — the build-time default a growing corpus
-    needs; a static cell count under-serves recall as N scales."""
+    needs; a static cell count under-serves recall as N scales. The
+    resolved ``n_cells`` is recorded in the manifest."""
     if n_cells is None:
         n_cells, _ = ivf_defaults(corpus.count())
     build = ivf_centroids_trained if trained else ivf_centroids
     cent = build(corpus, n_cells, id_col, vec_col)
-    cent.coalesce(1).write.mode("overwrite").parquet(path + "/centroids")
-    c = ivf_assign(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
-        cent,
-        1,
-        "neighbor_id",
-        "cv",
+    index_store.commit(
+        path,
+        "ivf",
+        {"n_cells": int(n_cells), "trained": trained},
+        {
+            "centroids": cent.coalesce(1),
+            "cells": _assign_cells(corpus, cent, id_col, vec_col),
+        },
     )
-    c.write.mode("overwrite").parquet(path + "/cells")
 
 
 def load_ivf_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
     """→ (centroids DataFrame, assignments DataFrame) for
     ``ivf_ann_topk(index=…)``."""
-    return (
-        spark.read.parquet(path + "/centroids"),
-        spark.read.parquet(path + "/cells"),
-    )
+    idx = index_store.load(spark, path, "ivf")
+    return idx.frame("centroids"), idx.frame("cells")
 
 
 def upsert_ivf_index(
@@ -2007,26 +2005,19 @@ def upsert_ivf_index(
 ) -> None:
     """Incremental index maintenance — the daily-increment pattern for
     vector corpora: assign ONLY the new vectors to the EXISTING
-    centroids and append their (vector, cell) rows to the assignments
-    table. No rebuild: the full-corpus re-assignment scan (the expensive
-    part at 100 TB) is skipped, and because cell assignment is pure
-    deterministic arithmetic against fixed centroids, the upserted index
-    is row-identical to a from-scratch build over the union corpus with
-    the same centroids (asserted by the ann_ivf_upsert_topk oracle and
-    tests). Centroid drift under sustained growth is the operational
-    knob: retrain (save_ivf_index) when cell-size skew degrades probe
-    recall — same contract as FAISS's add() vs retrain."""
-    cent = spark.read.parquet(path + "/centroids")
-    add = ivf_assign(
-        new_vectors.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-        ),
-        cent,
-        1,
-        "neighbor_id",
-        "cv",
-    )
-    add.write.mode("append").parquet(path + "/cells")
+    centroids and commit their (vector, cell) rows as a new generation of
+    the assignments table. No rebuild: the full-corpus re-assignment scan
+    (the expensive part at 100 TB) is skipped, and because cell
+    assignment is pure deterministic arithmetic against fixed centroids,
+    the upserted index is row-identical to a from-scratch build over the
+    union corpus with the same centroids (asserted by the
+    ann_ivf_upsert_topk oracle and tests). Centroid drift under sustained
+    growth is the operational knob: retrain (save_ivf_index) when
+    cell-size skew degrades probe recall — same contract as FAISS's add()
+    vs retrain."""
+    idx = index_store.load(spark, path, "ivf")
+    add = _assign_cells(new_vectors, idx.frame("centroids"), id_col, vec_col)
+    index_store.commit(path, "ivf", idx.params, {"cells": add}, base=idx)
 
 
 def save_ivfpq_index(
@@ -2047,7 +2038,7 @@ def save_ivfpq_index(
     assignment) all happen HERE, once. ``n_cells=None`` auto-sizes via
     :func:`ivf_defaults`.
 
-    The encoding convention (``residual=``) is PERSISTED in ``path/meta``
+    The encoding convention (``residual=``) is PERSISTED in the manifest
     and validated by ``ivfpq_ann_topk(index=…, residual=…)`` — probing
     raw codes with residual ADC tables (or vice versa) computes wrong
     approximate distances with no error, so the index carries its own
@@ -2055,37 +2046,25 @@ def save_ivfpq_index(
     if n_cells is None:
         n_cells, _ = ivf_defaults(corpus.count())
     cent = ivf_centroids(corpus, n_cells, id_col, vec_col)
-    cent.coalesce(1).write.mode("overwrite").parquet(path + "/centroids")
     if residual:
         books = pq_codebooks_residual(
             corpus, cent, n_subspaces, n_centroids, id_col, vec_col
         )
     else:
         books = pq_codebooks(corpus, n_subspaces, n_centroids, id_col, vec_col)
-    S, C, _ds = books.shape
-    rows = [
-        (int(s), int(c), [float(x) for x in books[s, c]])
-        for s in range(S)
-        for c in range(C)
-    ]
-    spark = corpus.sparkSession
-    from ..session import local_rows_df as _ldf
-
-    _ldf(
-        spark, rows, "subspace int, centroid int, features array<double>"
-    ).write.mode("overwrite").parquet(path + "/codebooks")
-    cassign = ivf_assign(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
-        cent,
-        1,
-        "neighbor_id",
-        "cv",
-    ).select("neighbor_id", "cell")
+    cassign = _assign_cells(corpus, cent, id_col, vec_col).select("neighbor_id", "cell")
     coded = _ivfpq_encode(corpus, cent, cassign, books, id_col, vec_col, residual)
-    coded.write.mode("overwrite").parquet(path + "/coded")
-    _ldf(spark, [(bool(residual),)], "residual boolean").write.mode(
-        "overwrite"
-    ).parquet(path + "/meta")
+    index_store.commit(
+        path,
+        "ivfpq",
+        {
+            "n_cells": int(n_cells),
+            "n_subspaces": n_subspaces,
+            "n_centroids": n_centroids,
+            "residual": bool(residual),
+        },
+        {"centroids": cent.coalesce(1), "codebooks": books, "coded": coded},
+    )
 
 
 def _ivfpq_encode(
@@ -2127,25 +2106,13 @@ def load_ivfpq_index(
 ) -> tuple[DataFrame, np.ndarray, DataFrame, dict]:
     """→ (centroids, codebooks ndarray, coded corpus, meta) for
     ``ivfpq_ann_topk(index=…)``. ``meta['residual']`` is the persisted
-    encoding convention (False for indexes written before the meta file
-    existed — those were always raw-coded)."""
-    rows = spark.read.parquet(path + "/codebooks").collect()
-    S = max(r["subspace"] for r in rows) + 1
-    C = max(r["centroid"] for r in rows) + 1
-    ds = len(rows[0]["features"])
-    books = np.zeros((S, C, ds), dtype=np.float64)
-    for r in rows:
-        books[r["subspace"], r["centroid"]] = r["features"]
-    try:
-        meta_rows = spark.read.parquet(path + "/meta").collect()
-        meta = {"residual": bool(meta_rows[0]["residual"])}
-    except Exception:  # pre-meta index layout: raw by construction
-        meta = {"residual": False}
+    encoding convention."""
+    idx = index_store.load(spark, path, "ivfpq")
     return (
-        spark.read.parquet(path + "/centroids"),
-        books,
-        spark.read.parquet(path + "/coded"),
-        meta,
+        idx.frame("centroids"),
+        idx.array("codebooks"),
+        idx.frame("coded"),
+        {"residual": idx.params["residual"]},
     )
 
 
@@ -2157,29 +2124,34 @@ def upsert_ivfpq_index(
     vec_col: str = "embedding",
 ) -> None:
     """Incremental IVF-PQ maintenance: assign + encode ONLY the new
-    vectors against the PERSISTED centroids/codebooks and append their
-    (neighbor_id, codes, cell) rows, under the index's PERSISTED code
-    convention. Raw codes make this a pure append trivially; residual
-    codes are ALSO append-safe here because an upsert never re-assigns
-    existing rows — each appended row's code is computed against its own
-    (frozen) cell centroid. Row-identical to a from-scratch encode of
-    the union corpus with the same centroids+codebooks; retrain
-    (save_ivfpq_index) when cell skew or quantization drift degrades
-    recall."""
-    cent, books, _coded, meta = load_ivfpq_index(spark, path)
-    cassign = ivf_assign(
-        new_vectors.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-        ),
-        cent,
-        1,
-        "neighbor_id",
-        "cv",
-    ).select("neighbor_id", "cell")
-    add = _ivfpq_encode(
-        new_vectors, cent, cassign, books, id_col, vec_col, meta["residual"]
+    vectors against the PERSISTED centroids/codebooks and commit their
+    (neighbor_id, codes, cell) rows as a new generation, under the
+    index's PERSISTED code convention. Raw codes make this a pure append
+    trivially; residual codes are ALSO append-safe here because an
+    upsert never re-assigns existing rows — each appended row's code is
+    computed against its own (frozen) cell centroid. Row-identical to a
+    from-scratch encode of the union corpus with the same
+    centroids+codebooks; retrain (save_ivfpq_index) when cell skew or
+    quantization drift degrades recall."""
+    idx = index_store.load(spark, path, "ivfpq")
+    cent, books = idx.frame("centroids"), idx.array("codebooks")
+    cassign = _assign_cells(new_vectors, cent, id_col, vec_col).select(
+        "neighbor_id", "cell"
     )
-    add.write.mode("append").parquet(path + "/coded")
+    add = _ivfpq_encode(
+        new_vectors, cent, cassign, books, id_col, vec_col, idx.params["residual"]
+    )
+    index_store.commit(path, "ivfpq", idx.params, {"coded": add}, base=idx)
+
+
+def _lsh_signatures(vectors, dim, n_planes, n_tables, id_col, vec_col) -> DataFrame:
+    return lsh_index(
+        vectors.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
+        "cv",
+        dim,
+        n_planes,
+        n_tables,
+    )
 
 
 def save_lsh_index(
@@ -2193,22 +2165,21 @@ def save_lsh_index(
 ) -> None:
     """Persist the multi-table LSH index: one (neighbor_id, cv, table,
     bucket) row per vector per table. Hyperplanes are derived from the
-    fixed seed, so only the signatures need storing; at 100 TB bucket
-    the written table by (table, bucket) to make every probe join
-    co-located."""
-    c = lsh_index(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
-        "cv",
-        dim,
-        n_planes,
-        n_tables,
+    fixed seed, so only the signatures (and the draw's parameters, in the
+    manifest) need storing; at 100 TB bucket the written table by
+    (table, bucket) to make every probe join co-located."""
+    sigs = _lsh_signatures(corpus, dim, n_planes, n_tables, id_col, vec_col)
+    index_store.commit(
+        path,
+        "lsh",
+        {"dim": dim, "n_planes": n_planes, "n_tables": n_tables},
+        {"signatures": sigs},
     )
-    c.write.mode("overwrite").parquet(path)
 
 
 def load_lsh_index(spark, path: str) -> DataFrame:
     """→ signatures DataFrame for ``lsh_ann_topk(index=…)``."""
-    return spark.read.parquet(path)
+    return index_store.load(spark, path, "lsh").frame("signatures")
 
 
 def upsert_lsh_index(
@@ -2223,20 +2194,17 @@ def upsert_lsh_index(
 ) -> None:
     """Incremental LSH maintenance: signatures for the new vectors only
     (hyperplanes are seed-derived, identical to the original build) are
-    appended — row-identical to a full rebuild over the union corpus.
-    Same contract as ``upsert_ivf_index``; the ``dim/n_planes/n_tables``
-    parameters must match the original build (they parameterize the
-    seeded hyperplane draw)."""
-    add = lsh_index(
-        new_vectors.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-        ),
-        "cv",
-        dim,
-        n_planes,
-        n_tables,
-    )
-    add.write.mode("append").parquet(path)
+    committed as a new generation — row-identical to a full rebuild over
+    the union corpus. Same contract as ``upsert_ivf_index``; the
+    ``dim/n_planes/n_tables`` parameters parameterize the seeded
+    hyperplane draw, so a mismatch with the build's raises ``ValueError``
+    instead of appending incompatible buckets."""
+    idx = index_store.load(spark, path, "lsh")
+    asked = {"dim": dim, "n_planes": n_planes, "n_tables": n_tables}
+    if asked != idx.params:
+        raise ValueError(f"LSH index at {path!r} was built with {idx.params}, not {asked}")
+    add = _lsh_signatures(new_vectors, dim, n_planes, n_tables, id_col, vec_col)
+    index_store.commit(path, "lsh", idx.params, {"signatures": add}, base=idx)
 
 
 def upsert_pq_index(
@@ -2247,16 +2215,15 @@ def upsert_pq_index(
     vec_col: str = "embedding",
 ) -> None:
     """Incremental PQ maintenance: encode ONLY the new vectors with the
-    PERSISTED codebooks and append their codes — the Lloyd training and
-    the full-corpus encode scan are both skipped. Codes are
-    deterministic per (codebooks, vector), so the upserted codes table
-    is row-identical to re-encoding the union corpus with the same
-    codebooks. Codebook drift under sustained growth is the retrain
+    PERSISTED codebooks and commit their codes as a new generation — the
+    Lloyd training and the full-corpus encode scan are both skipped.
+    Codes are deterministic per (codebooks, vector), so the upserted
+    codes table is row-identical to re-encoding the union corpus with the
+    same codebooks. Codebook drift under sustained growth is the retrain
     knob, as with IVF centroids."""
-    books, _codes = load_pq_index(spark, path)
-    pq_encode(new_vectors, books, id_col, vec_col).write.mode("append").parquet(
-        path + "/codes"
-    )
+    idx = index_store.load(spark, path, "pq")
+    add = pq_encode(new_vectors, idx.array("codebooks"), id_col, vec_col)
+    index_store.commit(path, "pq", idx.params, {"codes": add}, base=idx)
 
 
 def kcenter_sample(

@@ -15,11 +15,18 @@ Determinism rules (so the driver's value-hash matches):
 
 from __future__ import annotations
 
+import atexit
+import functools
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
+from urllib.parse import quote
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import index_store
 from .operators import relational as R
 from .operators import temporal as T
 from .session import align_session, local_rows_df
@@ -76,13 +83,13 @@ class _fixture_build:
         return False
 
 
-#: Cold first-invocation build/load seconds (r11 verdict item: the
-#: session-keyed index builds and ``_memo_load`` shift work out of warm
-#: reps — record what the COLD invocation paid so warm minima are never
-#: conflated with cold cost). Keys are ``"<query>:build"`` for on-disk
-#: index builds / bucketed-table writes and ``"load:<kind>"`` for the
-#: per-session memoized index loads; values accumulate across the run.
-#: The bench exports a snapshot as ``extras.cold_build_sec``.
+#: Cold first-invocation build seconds (r11 verdict item: the build-once
+#: prebuilt indexes shift work out of warm reps — record what the COLD
+#: invocation paid so warm minima are never conflated with cold cost).
+#: Keys are ``"<index kind>:build"`` for the prebuilt index builds and
+#: ``"layout_bucketed_join:build"`` for the bucketed-table writes; values
+#: accumulate across the run. The bench exports a snapshot as
+#: ``extras.cold_build_sec``.
 COLD_BUILD_SECONDS: dict[str, float] = {}
 
 
@@ -1292,20 +1299,9 @@ def ann_nsw_routed_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     by ef_search, never wrong answers. Golden-pinned from the
     independent numpy mirror of the whole composition (unit-space
     codebook train, per-cell encode, ADC beams, exact rerank)."""
-    import tempfile as _tf
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("nsw_routed_pq", sf_dir))
-    if path is None:
-        with _cold_build("ann_nsw_routed_pq_topk:build"):
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/nsw_routed_pq"
-            GA.save_nsw_routed_pq_index(
-                emb, path, n_cells=8, m=8, ef_build=24, n_subspaces=8,
-                n_centroids=256,
-            )
-            _ANN_INDEX_CACHE[("nsw_routed_pq", sf_dir)] = path
-    idx = _memo_load(spark, "nsw_routed_pq", path, GA.load_nsw_routed_pq_index)
+    idx = _prebuilt_routed_pq(spark, sf_dir, emb)
     # 8-bit codes + a wider beam than the raw probe: ADC noise is paid in
     # beam width, never in answers (r9 calibration: C=256/ef=32 matches
     # the raw routed probe's recall on this fixture; C=16/ef=16 was 0.55)
@@ -1402,8 +1398,6 @@ def stream_routed_pq_upsert_probe(spark: SparkSession, sf_dir: str) -> DataFrame
             "left_semi",
         )
         GA.upsert_nsw_routed_pq_index(add, emb, idx_path)
-        # NOT memoized: the upsert just rewrote shards, and a cached
-        # load would serve the pre-upsert file listing
         idx = GA.load_nsw_routed_pq_index(spark, idx_path)
         GA.nsw_routed_pq_ann_topk(
             q, emb, idx, k=5, n_probe=2, ef_search=32
@@ -1584,26 +1578,23 @@ def ann_ivfpq_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode + assignment scans — all of which are index-BUILD work, not
     probe work (the production user trains once, offline, like mkdb).
     The build is persisted via save_ivfpq_index at the SAME resolved
-    sizes and the probe runs against the loaded index — bit-identical to
+    sizes (the manifest records the resolved n_cells) and the probe runs
+    against the loaded index — bit-identical to
     the inline build (doubles round-trip parquet exactly; shared golden
     oracle re-verified). Cold build seconds land in
-    COLD_BUILD_SECONDS["ann_ivfpq_auto_topk:build"]."""
-    import tempfile as _tf
-
+    COLD_BUILD_SECONDS["ivfpq_auto:build"]."""
     emb = _t(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 8)
-    got = _ANN_INDEX_CACHE.get(("ivfpq_auto", sf_dir))
-    if got is None:
-        with _cold_build("ann_ivfpq_auto_topk:build"):
-            n_cells, _ = SIM.ivf_defaults(emb.count())
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/ivfpq_auto"
-            SIM.save_ivfpq_index(
-                emb, path, n_cells=n_cells, n_subspaces=8, n_centroids=256
-            )
-            got = (path, n_cells)
-            _ANN_INDEX_CACHE[("ivfpq_auto", sf_dir)] = got
-    path, n_cells = got
-    idx = _memo_load(spark, "ivfpq", path, SIM.load_ivfpq_index)
+    idx, n_cells = _prebuilt(
+        spark, sf_dir, "ivfpq_auto",
+        lambda p: SIM.save_ivfpq_index(
+            emb, p, n_cells=None, n_subspaces=8, n_centroids=256
+        ),
+        lambda s, p: (
+            SIM.load_ivfpq_index(s, p),
+            index_store.read_manifest(p)["params"]["n_cells"],
+        ),
+    )
     # the identical auto-resolution the inline path applies (ivf_defaults
     # probe rule); refine=None scales with the probe width as before
     n_probe = min(n_cells, max(8, n_cells // 16))
@@ -5660,15 +5651,13 @@ def layout_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exchange-free JOIN, not a table rewrite. Deterministic
     # content, so reuse is safe.
     app = spark.sparkContext.applicationId
-    cache_key = ("bucketed", sf_dir, app)
-    tables = _ANN_INDEX_CACHE.get(cache_key)
+    cache_key = (sf_dir, app)
+    tables = _BUCKETED_TABLES.get(cache_key)
     if tables is None:
         # clear prior-SESSION leftovers only: another sf_dir's cached
         # tables in THIS session must survive (dropping them would leave
         # their cache entry pointing at nothing)
-        if not any(
-            k[0] == "bucketed" and k[2] == app for k in _ANN_INDEX_CACHE
-        ):
+        if not any(k[1] == app for k in _BUCKETED_TABLES):
             for t in spark.catalog.listTables():
                 if t.name.startswith("bensp_q_"):
                     spark.sql(f"DROP TABLE IF EXISTS {t.name}")
@@ -5681,7 +5670,7 @@ def layout_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
             B.write_bucketed(o, t_o, 8, "o_custkey")
             B.write_bucketed(c, t_c, 8, "c_custkey")
-        _ANN_INDEX_CACHE[cache_key] = (t_o, t_c)
+        _BUCKETED_TABLES[cache_key] = (t_o, t_c)
     else:
         t_o, t_c = tables
     joined = spark.table(t_o).join(
@@ -5693,23 +5682,52 @@ def layout_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: deterministic prebuilt ANN indexes, one build per (family, corpus)
-_ANN_INDEX_CACHE: dict = {}
+#: (sf_dir, applicationId) -> the bucketed (orders, customer) table names
+_BUCKETED_TABLES: dict = {}
 
 
-def _memo_load(spark: SparkSession, kind: str, path: str, loader):
-    """Memoize a loaded index per (session, kind, path): load_* eagerly
-    collects its meta row (a driver job), so re-loading per declared-
-    query call paid ~0.2 s of pure session fixed cost. The loaded tuple
-    holds lazy DataFrames bound to the session — keyed by applicationId
-    so a fresh session never sees another session's plans."""
-    key = ("loaded", kind, path, spark.sparkContext.applicationId)
-    got = _ANN_INDEX_CACHE.get(key)
-    if got is None:
-        with _cold_build(f"load:{kind}"):
-            got = loader(spark, path)
-        _ANN_INDEX_CACHE[key] = got
-    return got
+@functools.lru_cache(maxsize=None)
+def _index_root() -> str:
+    """One process-scoped root for the declared queries' prebuilt
+    indexes, removed at interpreter exit."""
+    root = tempfile.mkdtemp(prefix="bensp_ann_idx_")
+    atexit.register(shutil.rmtree, root, True)
+    return root
+
+
+def _prebuilt(spark: SparkSession, sf_dir: str, kind: str, build, load):
+    """→ ``load(spark, path)`` of the prebuilt index ``kind`` over
+    ``sf_dir``. ``build(path)`` runs only when no manifest is
+    committed at ``<root>/<kind>/<sf_dir>`` — the build-once contract:
+    the index is deterministic per corpus, so repeated invocations (bench
+    reps) reuse it, and index_store memoises the loads per session."""
+    path = os.path.join(_index_root(), kind, quote(sf_dir, safe=""))
+    if not index_store.committed(path):
+        with _cold_build(f"{kind}:build"):
+            build(path)
+    return load(spark, path)
+
+
+def _prebuilt_routed_pq(spark: SparkSession, sf_dir: str, emb: DataFrame):
+    """The routed-PQ index both ann_nsw_routed_pq_topk and
+    stream_ann_routed_pq_topk probe."""
+    return _prebuilt(
+        spark, sf_dir, "nsw_routed_pq",
+        lambda p: GA.save_nsw_routed_pq_index(
+            emb, p, n_cells=8, m=8, ef_build=24, n_subspaces=8, n_centroids=256
+        ),
+        GA.load_nsw_routed_pq_index,
+    )
+
+
+def _prebuilt_nsw(spark: SparkSession, sf_dir: str, emb: DataFrame):
+    """The sharded-NSW index both ann_nsw_prebuilt_topk and
+    stream_ann_nsw_topk probe."""
+    return _prebuilt(
+        spark, sf_dir, "nsw",
+        lambda p: GA.save_nsw_index(emb, p, n_shards=4, m=8, ef_build=24),
+        GA.load_nsw_index,
+    )
 
 
 @query(
@@ -5722,19 +5740,13 @@ def ann_ivf_prebuilt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment — is paid at write time, the query pays only the probe
     join and exact re-rank. Must match the inline-build oracle exactly
     (doubles round-trip parquet bit-exactly)."""
-    import tempfile as _tf
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
-    # build-once contract: the index is deterministic per corpus, so
-    # repeated invocations (bench reps) reuse the persisted build
-    path = _ANN_INDEX_CACHE.get(("ivf", sf_dir))
-    if path is None:
-        with _cold_build("ann_ivf_prebuilt_topk:build"):
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/ivf"
-            SIM.save_ivf_index(emb, path, n_cells=16)
-            _ANN_INDEX_CACHE[("ivf", sf_dir)] = path
-    idx = _memo_load(spark, "ivf", path, SIM.load_ivf_index)
+    idx = _prebuilt(
+        spark, sf_dir, "ivf",
+        lambda p: SIM.save_ivf_index(emb, p, n_cells=16),
+        SIM.load_ivf_index,
+    )
     return SIM.ivf_ann_topk(q, emb, k=5, n_cells=16, n_probe=2, index=idx)
 
 
@@ -5751,19 +5763,15 @@ def ann_ivf_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     half) and assignment is pure arithmetic, the upserted index must
     answer queries identically to a from-scratch build over everything —
     it shares ann_ivf_topk's exact SQL oracle."""
-    import tempfile as _tf
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("ivf_upsert", sf_dir))
-    if path is None:
-        with _cold_build("ann_ivf_upsert_topk:build"):
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/ivf_upsert"
-            half = emb.agg((F.max("vec_id") / 2).cast("long").alias("m")).collect()[0]["m"]
-            SIM.save_ivf_index(emb.filter(F.col("vec_id") <= half), path, n_cells=16)
-            SIM.upsert_ivf_index(spark, path, emb.filter(F.col("vec_id") > half))
-            _ANN_INDEX_CACHE[("ivf_upsert", sf_dir)] = path
-    idx = _memo_load(spark, "ivf", path, SIM.load_ivf_index)
+
+    def build(path: str) -> None:
+        half = emb.agg((F.max("vec_id") / 2).cast("long").alias("m")).collect()[0]["m"]
+        SIM.save_ivf_index(emb.filter(F.col("vec_id") <= half), path, n_cells=16)
+        SIM.upsert_ivf_index(spark, path, emb.filter(F.col("vec_id") > half))
+
+    idx = _prebuilt(spark, sf_dir, "ivf_upsert", build, SIM.load_ivf_index)
     return SIM.ivf_ann_topk(q, emb, k=5, n_cells=16, n_probe=2, index=idx)
 
 
@@ -5801,56 +5809,52 @@ def pipeline_daily_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
     extend the IVF corpus. Proves the stage contracts (dedup flags →
     survivor ids → vector schema → index append) actually compose, not
     just that each part works alone."""
-    import tempfile as _tf
-
     from .session import pooled_persist
 
     emb = _t(spark, sf_dir, "embeddings")
     v = F.col("embedding").cast("array<double>")
     emb_d = emb.select("vec_id", v.alias("embedding"))
     q = emb_d.filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("ivf_daily", sf_dir))
-    if path is None:
-        with _cold_build("pipeline_daily_increment:build"):
-            # --- stage 1: dedup the derived new batch against history -----
-            docs = _t(spark, sf_dir, "documents")
-            history = docs.select("doc_id", "text")
-            words = F.split(F.trim(F.col("text")), r"\s+")
-            keep = F.greatest(F.size(words) - 3, F.lit(1))
-            jitter = docs.select(
-                (F.col("doc_id") + DT.AUG_OFFSET).alias("doc_id"),
-                F.array_join(F.slice(words, 1, keep), " ").alias("text"),
-            )
-            exact_copies = docs.filter(F.col("doc_id") < 20).select(
-                (F.col("doc_id") + 2 * DT.AUG_OFFSET).alias("doc_id"), "text"
-            )
-            new_batch = pooled_persist(
-                jitter.unionByName(exact_copies), "q.pipeline_daily.new_batch"
-            )
-            hist_h, hist_s = DT.history_signatures(history)
-            sig = (
-                pooled_persist(hist_h, "q.pipeline_daily.hist_hashes"),
-                pooled_persist(hist_s, "q.pipeline_daily.hist_sims"),
-            )
-            flags = DT.incremental_dedup(new_batch, max_hamming=3, history_sig=sig)
-            survivors = flags.filter(F.col("is_kept")).select("doc_id")
-            # --- stage 2: embed survivors (engine-exact jitter transform) --
-            surv_emb = survivors.join(
-                emb_d.withColumnRenamed("vec_id", "src_id"),
-                F.col("doc_id") - DT.AUG_OFFSET == F.col("src_id"),
-            ).select(
-                F.col("doc_id").alias("vec_id"),
-                F.transform(
-                    F.col("embedding"), lambda x: x * F.lit(1.01) + F.lit(0.001)
-                ).alias("embedding"),
-            )
-            # --- stage 3: upsert into the persisted history index ----------
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/ivf_daily"
-            SIM.save_ivf_index(emb_d, path, n_cells=16)
-            SIM.upsert_ivf_index(spark, path, surv_emb)
-            _ANN_INDEX_CACHE[("ivf_daily", sf_dir)] = path
+
+    def build(path: str) -> None:
+        # --- stage 1: dedup the derived new batch against history -----
+        docs = _t(spark, sf_dir, "documents")
+        history = docs.select("doc_id", "text")
+        words = F.split(F.trim(F.col("text")), r"\s+")
+        keep = F.greatest(F.size(words) - 3, F.lit(1))
+        jitter = docs.select(
+            (F.col("doc_id") + DT.AUG_OFFSET).alias("doc_id"),
+            F.array_join(F.slice(words, 1, keep), " ").alias("text"),
+        )
+        exact_copies = docs.filter(F.col("doc_id") < 20).select(
+            (F.col("doc_id") + 2 * DT.AUG_OFFSET).alias("doc_id"), "text"
+        )
+        new_batch = pooled_persist(
+            jitter.unionByName(exact_copies), "q.pipeline_daily.new_batch"
+        )
+        hist_h, hist_s = DT.history_signatures(history)
+        sig = (
+            pooled_persist(hist_h, "q.pipeline_daily.hist_hashes"),
+            pooled_persist(hist_s, "q.pipeline_daily.hist_sims"),
+        )
+        flags = DT.incremental_dedup(new_batch, max_hamming=3, history_sig=sig)
+        survivors = flags.filter(F.col("is_kept")).select("doc_id")
+        # --- stage 2: embed survivors (engine-exact jitter transform) --
+        surv_emb = survivors.join(
+            emb_d.withColumnRenamed("vec_id", "src_id"),
+            F.col("doc_id") - DT.AUG_OFFSET == F.col("src_id"),
+        ).select(
+            F.col("doc_id").alias("vec_id"),
+            F.transform(
+                F.col("embedding"), lambda x: x * F.lit(1.01) + F.lit(0.001)
+            ).alias("embedding"),
+        )
+        # --- stage 3: upsert into the persisted history index ----------
+        SIM.save_ivf_index(emb_d, path, n_cells=16)
+        SIM.upsert_ivf_index(spark, path, surv_emb)
+
     # --- stage 4: probe the merged index ------------------------------
-    idx = _memo_load(spark, "ivf", path, SIM.load_ivf_index)
+    idx = _prebuilt(spark, sf_dir, "ivf_daily", build, SIM.load_ivf_index)
     return SIM.ivf_ann_topk(q, emb_d, k=5, n_cells=16, n_probe=2, index=idx)
 
 
@@ -5860,17 +5864,11 @@ def ann_pq_prebuilt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet): Lloyd training and the encode scan happen at build time.
     Shares ann_pq_topk's golden oracle — the round-tripped index must
     reproduce the inline build bit-for-bit."""
-    import tempfile as _tf
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("pq", sf_dir))
-    if path is None:
-        with _cold_build("ann_pq_prebuilt_topk:build"):
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/pq"
-            SIM.save_pq_index(emb, path)
-            _ANN_INDEX_CACHE[("pq", sf_dir)] = path
-    idx = _memo_load(spark, "pq", path, SIM.load_pq_index)
+    idx = _prebuilt(
+        spark, sf_dir, "pq", lambda p: SIM.save_pq_index(emb, p), SIM.load_pq_index
+    )
     return SIM.pq_ann_topk(q, emb, k=5, refine=10, index=idx)
 
 
@@ -5887,17 +5885,13 @@ def ann_ivfpq_prebuilt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     build time; the query path is probe-join + ADC + exact rerank only.
     Must reproduce the inline build bit-for-bit — shares ann_ivfpq_topk's
     independent golden oracle."""
-    import tempfile as _tf
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("ivfpq", sf_dir))
-    if path is None:
-        with _cold_build("ann_ivfpq_prebuilt_topk:build"):
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/ivfpq"
-            SIM.save_ivfpq_index(emb, path, n_cells=16, n_centroids=16)
-            _ANN_INDEX_CACHE[("ivfpq", sf_dir)] = path
-    idx = _memo_load(spark, "ivfpq", path, SIM.load_ivfpq_index)
+    idx = _prebuilt(
+        spark, sf_dir, "ivfpq",
+        lambda p: SIM.save_ivfpq_index(emb, p, n_cells=16, n_centroids=16),
+        SIM.load_ivfpq_index,
+    )
     return SIM.ivfpq_ann_topk(q, emb, k=5, n_probe=2, refine=4, index=idx)
 
 
@@ -5913,17 +5907,9 @@ def ann_nsw_prebuilt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Probing a saved graph is bit-identical to the inline build over the
     same corpus (parquet round-trips the doubles and the adjacency
     exactly) — shares ann_nsw_topk's independent golden oracle."""
-    import tempfile as _tf
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("nsw", sf_dir))
-    if path is None:
-        with _cold_build("ann_nsw_prebuilt_topk:build"):
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/nsw"
-            GA.save_nsw_index(emb, path, n_shards=4, m=8, ef_build=24)
-            _ANN_INDEX_CACHE[("nsw", sf_dir)] = path
-    idx = _memo_load(spark, "nsw", path, GA.load_nsw_index)
+    idx = _prebuilt_nsw(spark, sf_dir, emb)
     return GA.nsw_ann_topk(q, emb, k=5, ef_search=16, index=idx)
 
 
@@ -5940,20 +5926,16 @@ def ann_nsw_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the full rebuild's order, so the upserted graph — and
     therefore the probe — is bit-identical to the inline build over the
     whole corpus: shares ann_nsw_topk's independent golden oracle."""
-    import tempfile as _tf
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("nsw_upsert", sf_dir))
-    if path is None:
-        with _cold_build("ann_nsw_upsert_topk:build"):
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/nsw_upsert"
-            GA.save_nsw_index(
-                emb.filter(F.col("vec_id") < 400), path, n_shards=4, m=8, ef_build=24
-            )
-            GA.upsert_nsw_index(emb.filter(F.col("vec_id") >= 400), path)
-            _ANN_INDEX_CACHE[("nsw_upsert", sf_dir)] = path
-    idx = _memo_load(spark, "nsw", path, GA.load_nsw_index)
+
+    def build(path: str) -> None:
+        GA.save_nsw_index(
+            emb.filter(F.col("vec_id") < 400), path, n_shards=4, m=8, ef_build=24
+        )
+        GA.upsert_nsw_index(emb.filter(F.col("vec_id") >= 400), path)
+
+    idx = _prebuilt(spark, sf_dir, "nsw_upsert", build, GA.load_nsw_index)
     return GA.nsw_ann_topk(q, emb, k=5, ef_search=16, index=idx)
 
 
@@ -5973,15 +5955,7 @@ def stream_ann_nsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("nsw", sf_dir))
-    if path is None:
-        with _cold_build("stream_ann_nsw_topk:build"):
-            import tempfile as _tf
-
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/nsw"
-            GA.save_nsw_index(emb, path, n_shards=4, m=8, ef_build=24)
-            _ANN_INDEX_CACHE[("nsw", sf_dir)] = path
-    idx = _memo_load(spark, "nsw", path, GA.load_nsw_index)
+    idx = _prebuilt_nsw(spark, sf_dir, emb)
     from .streaming.ann_stream import stream_nsw_topk
 
     with _fixture_build("stream_ann_nsw_topk"):
@@ -6013,17 +5987,13 @@ def ann_nsw_routed_prebuilt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell graph were paid at write time; the query pays n_probe beams +
     the exact re-rank. Bit-identical to the inline routed build — shares
     ann_nsw_routed_topk's independent golden oracle."""
-    import tempfile as _tf
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("nsw_routed", sf_dir))
-    if path is None:
-        with _cold_build("ann_nsw_routed_prebuilt_topk:build"):
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/nsw_routed"
-            GA.save_nsw_routed_index(emb, path, n_cells=8, m=8, ef_build=24)
-            _ANN_INDEX_CACHE[("nsw_routed", sf_dir)] = path
-    idx = _memo_load(spark, "nsw_routed", path, GA.load_nsw_routed_index)
+    idx = _prebuilt(
+        spark, sf_dir, "nsw_routed",
+        lambda p: GA.save_nsw_routed_index(emb, p, n_cells=8, m=8, ef_build=24),
+        GA.load_nsw_routed_index,
+    )
     return GA.nsw_routed_ann_topk(
         q, emb, k=5, n_probe=2, ef_search=16, index=idx
     )
@@ -6043,20 +6013,18 @@ def ann_nsw_routed_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     order IS the full rebuild's, so the upserted index — and the probe —
     is bit-identical to the inline routed build over the whole corpus:
     shares ann_nsw_routed_topk's independent golden oracle."""
-    import tempfile as _tf
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("nsw_routed_upsert", sf_dir))
-    if path is None:
-        with _cold_build("ann_nsw_routed_upsert_topk:build"):
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/nsw_routed_upsert"
-            GA.save_nsw_routed_index(
-                emb.filter(F.col("vec_id") < 400), path, n_cells=8, m=8, ef_build=24
-            )
-            GA.upsert_nsw_routed_index(emb.filter(F.col("vec_id") >= 400), path)
-            _ANN_INDEX_CACHE[("nsw_routed_upsert", sf_dir)] = path
-    idx = _memo_load(spark, "nsw_routed", path, GA.load_nsw_routed_index)
+
+    def build(path: str) -> None:
+        GA.save_nsw_routed_index(
+            emb.filter(F.col("vec_id") < 400), path, n_cells=8, m=8, ef_build=24
+        )
+        GA.upsert_nsw_routed_index(emb.filter(F.col("vec_id") >= 400), path)
+
+    idx = _prebuilt(
+        spark, sf_dir, "nsw_routed_upsert", build, GA.load_nsw_routed_index
+    )
     return GA.nsw_routed_ann_topk(q, emb, k=5, n_probe=2, ef_search=16, index=idx)
 
 
@@ -6073,20 +6041,10 @@ def stream_ann_routed_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     it shares ann_nsw_routed_pq_topk's independent golden verbatim."""
     import shutil
     import tempfile
-    import tempfile as _tf
 
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.select("vec_id", "embedding").filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("nsw_routed_pq", sf_dir))
-    if path is None:
-        with _cold_build("stream_ann_routed_pq_topk:build"):
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/nsw_routed_pq"
-            GA.save_nsw_routed_pq_index(
-                emb, path, n_cells=8, m=8, ef_build=24, n_subspaces=8,
-                n_centroids=256,
-            )
-            _ANN_INDEX_CACHE[("nsw_routed_pq", sf_dir)] = path
-    idx = _memo_load(spark, "nsw_routed_pq", path, GA.load_nsw_routed_pq_index)
+    idx = _prebuilt_routed_pq(spark, sf_dir, emb)
     from .streaming.ann_stream import read_sink, stream_routed_pq_topk
 
     with _fixture_build("stream_ann_routed_pq_topk"):
@@ -6113,22 +6071,18 @@ ORACLES["stream_ann_routed_pq_topk"] = ORACLES["ann_nsw_routed_pq_topk"]
 def ann_nsw_routed_spill_prebuilt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boundary-spilled routed NSW probing a PERSISTED index: the SPANN
     closure assignment and every (spilled) cell graph were paid at write
-    time, the spill factor rides the meta so the probe collapses
+    time, the spill factor rides the manifest so the probe collapses
     duplicate nominations. Bit-identical to the inline spilled build —
     shares ann_nsw_routed_spill_topk's independent golden oracle."""
-    import tempfile as _tf
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("nsw_routed_spill", sf_dir))
-    if path is None:
-        with _cold_build("ann_nsw_routed_spill_prebuilt_topk:build"):
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/nsw_routed_spill"
-            GA.save_nsw_routed_index(
-                emb, path, n_cells=8, m=8, ef_build=24, spill_eps=0.25
-            )
-            _ANN_INDEX_CACHE[("nsw_routed_spill", sf_dir)] = path
-    idx = _memo_load(spark, "nsw_routed", path, GA.load_nsw_routed_index)
+    idx = _prebuilt(
+        spark, sf_dir, "nsw_routed_spill",
+        lambda p: GA.save_nsw_routed_index(
+            emb, p, n_cells=8, m=8, ef_build=24, spill_eps=0.25
+        ),
+        GA.load_nsw_routed_index,
+    )
     return GA.nsw_routed_ann_topk(
         q, emb, k=5, n_probe=2, ef_search=16, index=idx
     )

@@ -28,11 +28,6 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 
-# (applicationId, sf_dir, table) -> persisted DataFrame, filled by
-# cache_tables(). Queries pick cached inputs up transparently via
-# load_table — one in-memory columnar copy shared by the whole suite.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
 # (applicationId, sf_dir, table) -> LAZY DataFrame handle. Constructing a
 # reader is ~85 ms of driver fixed cost per call (py4j + footer/schema
 # resolution) and the suite re-loads the same ten tables hundreds of
@@ -43,32 +38,10 @@ _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 _DF_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
-def cache_tables(spark: SparkSession, sf_dir: str) -> None:
-    """Persist + materialize every test table for this (session, sf_dir).
-
-    Diagnostic helper only (profiling scripts, interactive exploration).
-    bench.py deliberately does NOT call this: every timed bench rep must
-    compute from the parquet inputs, so
-    persisting base tables ahead of the timed loop would move the scan
-    outside the measured region (removed in r11 — OPTIMIZATION_r11.md
-    methodology item 5). load_table falls back to the plain parquet scan
-    whenever the cache is absent."""
-    app = spark.sparkContext.applicationId
-    for name in TABLE_NAMES:
-        key = (app, sf_dir, name)
-        if key not in _TABLE_CACHE:
-            df = load_table(spark, sf_dir, name).persist()
-            df.count()
-            _TABLE_CACHE[key] = df
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; have {TABLE_NAMES}")
     app = spark.sparkContext.applicationId
-    cached = _TABLE_CACHE.get((app, sf_dir, name))
-    if cached is not None:
-        return cached
     key = (app, sf_dir, name)
     lazy = _DF_CACHE.get(key)
     if lazy is not None:
@@ -107,8 +80,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 def register_views(spark: SparkSession, sf_dir: str, suffix: str = "") -> None:
     """Register every test table as a temp view so plain ``spark.sql``
     works over the schema — the drop-in SQL surface (a reference user's
-    queries keep running, but through Catalyst). Honors cache_tables()
-    transparently: registered views point at the persisted DataFrames
-    when present."""
+    queries keep running, but through Catalyst)."""
     for name in TABLE_NAMES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name + suffix)

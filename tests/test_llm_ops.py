@@ -1735,11 +1735,12 @@ def test_routed_index_upserts_match_full_rebuild(spark, tmp_path):
     add = emb.filter("vec_id >= 400")
 
     def graph_rows(path, cols):
+        load = GA.load_nsw_routed_pq_index if "codes" in cols else GA.load_nsw_routed_index
         return {
             (r["shard"], r["pos"]): tuple(
                 tuple(r[c]) if isinstance(r[c], list) else r[c] for c in cols
             )
-            for r in spark.read.parquet(path + "/graph").collect()
+            for r in load(spark, path)[1].collect()
         }
 
     up, full = str(tmp_path / "r_up"), str(tmp_path / "r_full")
@@ -1805,8 +1806,8 @@ def test_nsw_routed_pq_index_compresses_without_losing_the_graph(spark, tmp_path
     GA.save_nsw_routed_pq_index(
         emb, pq_p, n_cells=8, m=8, ef_build=24, n_subspaces=8, n_centroids=256
     )
-    raw_graph = spark.read.parquet(raw_p + "/graph")
-    pq_graph = spark.read.parquet(pq_p + "/graph")
+    raw_graph = GA.load_nsw_routed_index(spark, raw_p)[1]
+    pq_graph = GA.load_nsw_routed_pq_index(spark, pq_p)[1]
     raw_adj = {
         (r["shard"], r["pos"]): (r["vec_id"], list(r["nbrs"]))
         for r in raw_graph.collect()

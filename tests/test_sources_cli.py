@@ -565,7 +565,7 @@ def test_ferret_cli_mkdb_and_prebuilt_index(tmpdir, spark):
         capture_output=True, text=True, cwd="/root/repo",
     )
     assert r.returncode == 0, r.stderr[-2000:]
-    assert glob.glob(os.path.join(index_p, "*.parquet"))
+    assert glob.glob(os.path.join(index_p, "g0", "index", "*.parquet"))
 
     def lines_of(out_p):
         ls = []
@@ -634,7 +634,7 @@ def test_ann_cli_mkdb_and_query_end_to_end(spark, tmpdir):
         capture_output=True, text=True, env=env, cwd=cwd,
     )
     assert r.returncode == 0, r.stderr[-2000:]
-    assert os.path.exists(os.path.join(idx, "centroids"))
+    assert os.path.exists(os.path.join(idx, "g0", "centroids"))
 
     out_inline = os.path.join(tmpdir, "out_inline")
     out_prebuilt = os.path.join(tmpdir, "out_prebuilt")
@@ -730,9 +730,11 @@ def test_ann_cli_graph_families_end_to_end(spark, tmpdir):
         capture_output=True, text=True, env=env, cwd=cwd,
     )
     assert r.returncode == 0, r.stderr[-2000:]
+    from bensp_suite_spark.operators import graph_ann as GA
+
     got_ids = {
         row["vec_id"]
-        for row in spark.read.parquet(ridx + "/graph")
+        for row in GA.load_nsw_routed_index(spark, ridx)[1]
         .select("vec_id").collect()
     }
     assert all(10_000 + i in got_ids for i in range(20))

@@ -1593,7 +1593,7 @@ def test_stream_maintained_index_equals_batch_upserts_and_replays(spark, tmp_pat
     def graph_rows(path):
         return {
             (r["shard"], r["pos"]): (r["vec_id"], tuple(r["codes"]), tuple(r["nbrs"]))
-            for r in spark.read.parquet(path + "/graph").collect()
+            for r in GA.load_nsw_routed_pq_index(spark, path)[1].collect()
         }
 
     # batch path: same survivor sets, sequential upserts → bit-identical
@@ -1618,12 +1618,12 @@ def test_stream_maintained_index_equals_batch_upserts_and_replays(spark, tmp_pat
     GA.upsert_nsw_routed_index(add, raw_idx)
     raw_once = {
         (r["shard"], r["pos"]): (r["vec_id"], tuple(r["nbrs"]))
-        for r in spark.read.parquet(raw_idx + "/graph").collect()
+        for r in GA.load_nsw_routed_index(spark, raw_idx)[1].collect()
     }
     GA.upsert_nsw_routed_index(add, raw_idx)
     raw_twice = {
         (r["shard"], r["pos"]): (r["vec_id"], tuple(r["nbrs"]))
-        for r in spark.read.parquet(raw_idx + "/graph").collect()
+        for r in GA.load_nsw_routed_index(spark, raw_idx)[1].collect()
     }
     assert raw_twice == raw_once
 
